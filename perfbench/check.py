@@ -181,20 +181,23 @@ def check_near_dup(work, facts):
             errs.append(f"doc {d} dropped as a near duplicate, but its best smaller-id "
                         f"match has token Jaccard {best:.4f} < {thr}")
             break
-    # Planted text pairs that independent MinHash rows would miss with
-    # probability below 1e-6 are reported, not asserted: the program's
-    # permutations (2k+1)h + b_k mod 2^31-1 shift linearly from k to k+4, so
-    # one shingle can hold the minimum of the same row in every band, and such
-    # pairs are missed on some seeds.
+    # Recall. An exact copy has the same shingles, hence the same band keys
+    # whatever the hash, so the larger id of every planted exact pair must be
+    # dropped. A planted pair at token Jaccard >= threshold whose miss
+    # probability (1 - s^r)^bands under independent MinHash rows is below
+    # 1e-6 (s = shingle Jaccard) must be found too.
+    for a, b in facts["exact_pairs"]:
+        if b not in dropped:
+            errs.append(f"planted exact copies ({a}, {b}) were not deduplicated: {b} survived")
+            break
     r, bands = c["rows_per_band"], c["bands"]
-    sure = missed = 0
     for a, b in facts["text_pairs"]:
         s = _jaccard(_shingles(toks[a]), _shingles(toks[b]))
-        if (1 - s ** r) ** bands < 1e-6 and _jaccard(sets[a], sets[b]) >= thr + 1e-9:
-            sure += 1
-            missed += b not in dropped
-    print(f"near_dup recall: {missed} of {sure} planted text pairs with an independent-hash "
-          f"miss probability below 1e-6 were missed")
+        if (1 - s ** r) ** bands < 1e-6 and _jaccard(sets[a], sets[b]) >= thr + 1e-9 \
+                and b not in dropped:
+            errs.append(f"planted pair ({a}, {b}) at shingle Jaccard {s:.3f} (miss probability "
+                        f"{(1 - s ** r) ** bands:.1e} under independent rows) was not found")
+            break
 
     vecs = facts["vecs"]
     norms = np.linalg.norm(vecs, axis=1)

@@ -8,6 +8,7 @@ copy of an earlier output.
 """
 
 import gzip
+import itertools
 import json
 import os
 import random
@@ -16,14 +17,14 @@ import numpy as np
 
 # ---------------------------------------------------------------- sizes ----
 
-INGEST = dict(sdf_files=2, sdf_per_file=1000, zinc_files=2, zinc_per_file=8000, pool=3000,
-              batch_size=5000, wave_files=1,
+INGEST = dict(sdf_files=4, sdf_per_file=2250, zinc_files=4, zinc_per_file=20250, pool=3000,
+              batch_size=20000, wave_files=2,
               sdf_blank_share=0.02, sdf_badtag_share=0.03,
               zinc_blank_share=0.02, zinc_short_share=0.01)
-CURATE = dict(files=8, bases=6000, max_variants=4, invalid_share=0.03,
+CURATE = dict(files=8, bases=20000, max_variants=4, invalid_share=0.03,
               slice_records=200)
-NEAR_DUP = dict(files=4, docs=1500, sources=6, min_tokens=40, max_tokens=100, vocab=12000,
-                cluster_share=0.12, vectors=2000, dim=64, vec_cluster_share=0.1,
+NEAR_DUP = dict(files=4, docs=5000, sources=6, min_tokens=40, max_tokens=100, vocab=12000,
+                header_tokens=24, header_share=0.5, cluster_share=0.12, vectors=3000, dim=64, vec_cluster_share=0.1,
                 text_threshold=0.8, vec_threshold=0.95, bands=8, rows_per_band=4,
                 vec_bits=8, vec_bands=4)
 
@@ -234,15 +235,15 @@ def gen_ingest(root, seed):
     return dict(good=good, counts=counts, files=files, input_records=input_records)
 
 
-def ingest_yaml(root, out, ckpt):
+def ingest_yaml(root, out, ckpt, sdf="*.sdf.gz", zinc="*.txt.gz"):
     c = INGEST
     return (f"job:\n  output_dir: {out}\n  checkpoint_dir: {ckpt}\n"
             f"  batch_size: {c['batch_size']}\n  sources:\n"
             f"    - type: pubchem\n      name: pubchem\n      options:\n"
-            f"        paths: {root}/pubchem/*.sdf.gz\n"
+            f"        paths: {root}/pubchem/{sdf}\n"
             f"        resume_wave_files: {c['wave_files']}\n"
             f"    - type: zinc\n      name: zinc\n      options:\n"
-            f"        paths: {root}/zinc/*.txt.gz\n"
+            f"        paths: {root}/zinc/{zinc}\n"
             f"        resume_wave_files: {c['wave_files']}\n")
 
 
@@ -331,32 +332,49 @@ def gen_near_dup(root, seed):
     """A text corpus over several sources and a vector corpus, each with
     planted near-duplicate clusters.
 
-    Text copies are exact, end-extended by one or two tokens, or edited in
-    3..8 middle positions; vector copies add small Gaussian noise.
+    Each source has a boilerplate header that a share of its documents
+    start with, so documents of one source share shingles and LSH reports
+    candidate pairs that verification rejects. Text copies are exact,
+    end-extended by one or two tokens, edited in 3..8 middle positions
+    (near duplicates), or edited in a quarter to a third of their positions
+    (near the threshold, mostly below it); vector copies add small Gaussian
+    noise.
     """
     c = NEAR_DUP
     rng = random.Random(seed * 104729 + 5)
     vocab = _words(rng, c["vocab"])
-    weights = [1.0 / (r + 1) ** 0.9 for r in range(len(vocab))]
+    cum = list(itertools.accumulate(1.0 / (r + 1) ** 0.9 for r in range(len(vocab))))
     sources = [f"src{i}" for i in range(c["sources"])]
+    header = {s: rng.sample(vocab, c["header_tokens"]) for s in sources}
     texts = []
+    srcs = []
     planted = []
+    exact = []
     n_base = int(c["docs"] * (1 - c["cluster_share"]))
     for _ in range(n_base):
+        src = rng.choice(sources)
         n = rng.randint(c["min_tokens"], c["max_tokens"])
-        texts.append(rng.choices(vocab, weights, k=n))
+        body = rng.choices(vocab, cum_weights=cum, k=n)
+        texts.append(header[src] + body if rng.random() < c["header_share"] else body)
+        srcs.append(src)
     while len(texts) < c["docs"]:
         b = rng.randrange(n_base)
         toks = list(texts[b])
-        kind = rng.choice(["exact", "extend", "extend", "edit"])
+        kind = rng.choice(["exact", "extend", "extend", "edit", "far"])
         if kind == "extend":
             for _ in range(rng.randint(1, 2)):
                 toks.append(rng.choice(vocab))
         elif kind == "edit":
             for p in rng.sample(range(3, len(toks) - 3), rng.randint(3, 8)):
                 toks[p] = rng.choice(vocab)
+        elif kind == "far":
+            for p in rng.sample(range(len(toks)), rng.randint(len(toks) // 4, len(toks) // 3)):
+                toks[p] = rng.choice(vocab)
         planted.append((b, len(texts)))
+        if kind == "exact":
+            exact.append((b, len(texts)))
         texts.append(toks)
+        srcs.append(rng.choice(sources))
     order = list(range(len(texts)))
     rng.shuffle(order)  # doc ids are a permutation: copies are not adjacent
     doc_id = {old: new for new, old in enumerate(order)}
@@ -364,12 +382,12 @@ def gen_near_dup(root, seed):
     lines = []
     for old in order:
         i = doc_id[old]
-        src = rng.choice(sources)
         text = " ".join(texts[old])
-        docs[i] = (src, text)
-        lines.append(json.dumps({"doc_id": i, "source": src, "text": text}) + "\n")
+        docs[i] = (srcs[old], text)
+        lines.append(json.dumps({"doc_id": i, "source": srcs[old], "text": text}) + "\n")
     _write_parts(f"{root}/docs", "docs", lines, c["files"])
     text_pairs = [tuple(sorted((doc_id[a], doc_id[b]))) for a, b in planted]
+    exact_pairs = [tuple(sorted((doc_id[a], doc_id[b]))) for a, b in exact]
 
     nrng = np.random.default_rng(seed * 31 + 7)
     nv = c["vectors"]
@@ -387,7 +405,8 @@ def gen_near_dup(root, seed):
     _write_parts(f"{root}/vecs", "vecs",
                  [json.dumps({"vec_id": i, "embedding": [float(x) for x in v]}) + "\n"
                   for i, v in enumerate(vecs)], c["files"])
-    return dict(docs=docs, text_pairs=text_pairs, vecs=vecs, vec_pairs=vec_pairs,
+    return dict(docs=docs, text_pairs=text_pairs, exact_pairs=exact_pairs, vecs=vecs,
+                vec_pairs=vec_pairs,
                 input_records=len(docs) + nv)
 
 

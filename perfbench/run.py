@@ -3,15 +3,16 @@
 
 Run from the root of a checkout:
 
-    python3 perfbench/run.py --workload ingest --seed 1 --seconds 10 --trace 0
-    python3 perfbench/run.py --steady 10 --seconds 10     # steadiness mode
+    python3 perfbench/run.py --workload ingest --seed 1 --seconds 6 --trace 0
+    python3 perfbench/run.py --steady 10 --seconds 6      # steadiness mode
     python3 perfbench/selftest.py                         # checks catch planted faults
 
 One run builds the program (once per source tree, see build.py), generates the
-seeded inputs, starts a fresh JVM with a fixed heap, runs untimed warm-up
-passes and then timed passes for --seconds, checks the last pass's outputs
-against facts computed apart from the program (check.py), and prints the run's
-environment and, as its last line, one JSON object. With --trace 0 the object
+seeded inputs, starts a fresh JVM with a fixed heap, runs an untimed cold pass
+over a slice of the inputs, untimed warm-up passes and then timed passes for
+--seconds, checks the last pass's outputs against facts computed apart from the
+program (check.py), and prints the run's environment and, as its last line, one
+JSON object. With --trace 0 the object
 holds the end-to-end metrics; with --trace 1 it holds the per-layer metrics of
 the traced passes and the layer probes. Everything it writes goes under
 `.bench_build/` of the checkout.
@@ -38,13 +39,11 @@ import gen  # noqa: E402
 
 WORKLOADS = ("ingest", "curate", "near_dup")
 HEAP = "2g"
-# untimed warm-up passes: the curate UDF path keeps JIT-compiling for several
-# passes, ingest and near_dup mostly after the cold first one. near_dup times
-# at least 5 passes, as Janino recompiles a different share of its classes each
-# pass; curate times 5, so that slow and fast runs stop at the same pass
-WARMUP = {"ingest": 1, "curate": 5, "near_dup": 1}
-MIN_PASSES = {"ingest": 3, "curate": 5, "near_dup": 5}
-EXTRA_SETUP_JVMS = 1  # set-up samples besides the run's own JVM
+# untimed full-size warm-up passes after the cold slice pass: curate's first
+# full pass is 30-50 % slower than later ones and costs only 2-3 s; ingest and
+# near_dup time right after the slice, so that a run stays near 40 s
+WARMUP = {"ingest": 0, "curate": 1, "near_dup": 0}
+MIN_PASSES = {"ingest": 3, "curate": 3, "near_dup": 3}
 DEADLINE_S = 170
 
 END_TO_END = {"setup_s": "s", "records_per_s": "1/s", "cpu_s_per_mrec": "s",
@@ -129,8 +128,14 @@ def write_configs(bb, workload):
     if workload in ("ingest", "probe"):
         put("job.yaml", gen.ingest_yaml(os.path.join(inp, "ingest"),
                                         os.path.join(work, "out"), os.path.join(work, "ckpt")))
+        # the cold warm-up pass reads one file per source
+        put("job-warm.yaml", gen.ingest_yaml(
+            os.path.join(inp, "ingest"), os.path.join(work, "warm-out"),
+            os.path.join(work, "warm-ckpt"), "Compound_000.sdf.gz", "tranche_000.txt.gz"))
     if workload in ("curate", "probe"):
         put("curate.sql", gen.CURATE_SQL.format(input=os.path.join(inp, "curate", "input")))
+        put("curate-warm.sql", gen.CURATE_SQL.format(
+            input=os.path.join(inp, "curate", "input", "curated-batch-001.jsonl.gz")))
         put("pipeline.yaml", gen.curate_pipeline_yaml(os.path.join(inp, "curate", "slice"),
                                                       os.path.join(work, "pipeline-out")))
     return work
@@ -214,8 +219,7 @@ def run(root, workload, seed, seconds, trace):
     classes = build.ensure(root)
     # the first run in a checkout also builds; the deadline counts from here
     deadline = time.monotonic() + DEADLINE_S
-    kinds = WORKLOADS if trace else (workload,)
-    facts = {k: inputs_for(bb, k, seed) for k in kinds}
+    facts = {workload: inputs_for(bb, workload, seed)}
     work = write_configs(bb, workload)
     probe = write_configs(bb, "probe") if trace else ""
     os.makedirs(os.path.join(bb, "logs"), exist_ok=True)
@@ -224,21 +228,17 @@ def run(root, workload, seed, seconds, trace):
         os.remove(logpath)
     result_path = os.path.join(work, "result.json")
     nd = gen.NEAR_DUP
-    args = ["--mode", "run", "--workload", workload, "--seconds", seconds,
+    args = ["--workload", workload, "--seconds", seconds,
             "--trace", trace, "--warmup", WARMUP[workload], "--min_passes", MIN_PASSES[workload],
             "--work", work, "--inputs", os.path.join(bb, "inputs"), "--probe", probe or "-",
             "--result", result_path, "--text_threshold", nd["text_threshold"],
             "--vec_threshold", nd["vec_threshold"]]
     cpu0 = cpu_times()
-    setups = [run_jvm(root, jvm_command(root, classes, args, trace), logpath, deadline)]
+    setup = run_jvm(root, jvm_command(root, classes, args, trace), logpath, deadline)
     cpu1 = cpu_times()
     with open(result_path) as f:
         res = json.load(f)
     errs = check.CHECKS[workload](work, facts[workload])
-    if not trace:
-        for _ in range(EXTRA_SETUP_JVMS):
-            setups.append(run_jvm(root, jvm_command(root, classes, ["--mode", "setup"], False),
-                                  logpath, deadline))
 
     env = res["env"]
     print(f"env: nproc={nproc()} master={master()} heap={HEAP} (max {env['heap_max_mb']} MB) "
@@ -250,9 +250,17 @@ def run(root, workload, seed, seconds, trace):
         print(f"steal: {100.0 * (cpu1[0] - cpu0[0]) / (cpu1[1] - cpu0[1]):.1f}% of machine CPU time")
     passes = res["passes"]
     walls = [p["wall_s"] for p in passes]
-    print("warm-up wall_s: " + " ".join(f"{w:.3f}" for w in res["warmup_wall_s"])
+    print(f"cold slice pass wall_s: {res['cold_wall_s']:.3f}; warm-up wall_s: "
+          + " ".join(f"{w:.3f}" for w in res["warmup_wall_s"])
           + f"; timed passes: {len(passes)}, wall_s: " + " ".join(f"{w:.3f}" for w in walls)
           + ", cpu_s: " + " ".join(f"{p['cpu_s']:.2f}" for p in passes))
+    if trace:
+        tp = res["traced_passes"]
+        print("traced passes wall_s: " + " ".join(f"{p['wall_s']:.3f}" for p in tp)
+              + ", process cpu_s: " + " ".join(f"{p['cpu_s']:.2f}" for p in tp)
+              + ", spark task cpu_s: " + " ".join(f"{p['task_cpu_s']:.2f}" for p in tp)
+              + f"; task share of process CPU: "
+              f"{sum(p['task_cpu_s'] for p in tp) / sum(p['cpu_s'] for p in tp):.2f}")
     for r in res["fail_reasons"]:
         print(f"failed operation: {r}")
     for e in errs:
@@ -260,20 +268,21 @@ def run(root, workload, seed, seconds, trace):
 
     n_in = facts[workload]["input_records"]
     if trace:
-        metrics = {k: {"value": res["layers"][k], "unit": u} for k, u in PER_LAYER.items()}
+        # a layer the workload does not call spends no time in it: 0
+        metrics = {k: {"value": res["layers"].get(k, 0.0), "unit": u}
+                   for k, u in PER_LAYER.items()}
     else:
         def med(f):
             return statistics.median(f(p) for p in passes)
         metrics = {
-            "setup_s": statistics.median(setups),
+            "setup_s": setup,
             "records_per_s": n_in / med(lambda p: p["wall_s"]),
             "cpu_s_per_mrec": med(lambda p: p["cpu_s"]) / n_in * 1e6,
             "output_bytes_per_record": med(lambda p: p["out_bytes"] / max(1, p["out_records"])),
             "heap_live_mb": res["heap_live_mb"],
         }
         metrics = {k: {"value": v, "unit": END_TO_END[k]} for k, v in metrics.items()}
-    print(f"input records per pass: {n_in}; setup samples s: "
-          + " ".join(f"{s:.3f}" for s in setups))
+    print(f"input records per pass: {n_in}; setup s: {setup:.3f}")
     print(json.dumps({"correct": not errs, "attempted": res["attempted"],
                       "failed": res["failed"], "metrics": metrics}))
     return 0

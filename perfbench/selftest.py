@@ -103,6 +103,29 @@ def drop_unique_doc(work, facts):
     _edit_rows(_parts(work, "survivors"), lambda rows: [r for r in rows if r["doc_id"] != b])
 
 
+def keep_all_docs(work, facts):
+    """Survivors hold every document: no near duplicate was dropped."""
+    lines = [json.dumps({"doc_id": i}) + "\n" for i in sorted(facts["docs"])]
+    for p in _parts(work, "survivors"):
+        os.remove(p)
+    with open(os.path.join(work, "out", "survivors", "part-00000.json"), "w") as f:
+        f.writelines(lines)
+
+
+def keep_sure_pair(work, facts):
+    """Survivors regain the larger doc of a planted edited pair that
+    independent MinHash rows would miss with probability below 1e-6."""
+    toks = {i: t.split(" ") for i, (_, t) in facts["docs"].items()}
+    kept = {r["doc_id"] for p in _parts(work, "survivors") for r in check._json_lines([p])}
+    for a, b in facts["text_pairs"]:
+        s = check._jaccard(check._shingles(toks[a]), check._shingles(toks[b]))
+        if ((a, b) not in facts["exact_pairs"] and b not in kept and (1 - s ** 4) ** 8 < 1e-6
+                and check._jaccard(set(toks[a]), set(toks[b])) >= 0.8 + 1e-9):
+            _edit_rows(_parts(work, "survivors"), lambda rows: rows + [{"doc_id": b}])
+            return
+    raise RuntimeError("no found edited pair to un-find")
+
+
 def low_vector_pair(work, facts):
     _edit_rows(_parts(work, "vec_pairs"), lambda rows: rows + [{"id1": 0, "id2": 1, "sim": 0.99}])
 
@@ -110,7 +133,7 @@ def low_vector_pair(work, facts):
 FAULTS = {
     "ingest": [drop_record, duplicate_record, batch_gap, leak_malformed],
     "curate": [wrong_keeper],
-    "near_dup": [drop_unique_doc, low_vector_pair],
+    "near_dup": [drop_unique_doc, keep_all_docs, keep_sure_pair, low_vector_pair],
 }
 
 

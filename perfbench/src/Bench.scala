@@ -40,7 +40,10 @@ object Json {
 
 /** The engine as users get it: a session with the settings of
   * `graft.cli.Main` (master from SPARK_MASTER, 32 shuffle partitions, UTC,
-  * no UI) and every engine SQL function registered.
+  * no UI) and every engine SQL function registered. `Main.main` builds its
+  * session inline, so this is a copy of its builder: `setup_s` times the
+  * copy, while the traced run times the CLI's own session start inside
+  * each `Main.main` pass.
   */
 object Session {
   def build(): SparkSession = {
@@ -93,6 +96,10 @@ object Fs {
 trait Workload {
   /** Called once with the set-up session, before any pass. */
   def prepare(spark: SparkSession): Unit
+  /** The first, cold pass of the JVM: the same calls over a slice of the
+    * inputs, untimed.
+    */
+  def coldPass(): Unit
   def clear(): Unit
   def pass(): Unit
   /** (bytes written, output records) of the pass that just ran. */
@@ -108,6 +115,13 @@ final class Ingest(work: String) extends Workload {
 
   def prepare(spark: SparkSession): Unit = spark.stop()
   def clear(): Unit = { Fs.rm(out); Fs.rm(s"$work/ckpt") }
+
+  def coldPass(): Unit = {
+    Fs.rm(s"$work/warm-out")
+    Fs.rm(s"$work/warm-ckpt")
+    Console.withOut(new java.io.ByteArrayOutputStream)(
+      graft.cli.Main.main(Array("ingest", s"$work/job-warm.yaml")))
+  }
 
   def pass(): Unit = {
     val buf = new java.io.ByteArrayOutputStream
@@ -129,9 +143,12 @@ final class Curate(work: String) extends Workload {
   def prepare(spark: SparkSession): Unit = spark.stop()
   def clear(): Unit = Fs.rm(out)
 
-  def pass(): Unit =
+  private def query(sql: String, dir: String): Unit =
     Console.withOut(new java.io.ByteArrayOutputStream)(graft.cli.Main.main(
-      Array("query", s"@$work/curate.sql", "--out", out, "--format", "json")))
+      Array("query", s"@$work/$sql", "--out", dir, "--format", "json")))
+
+  def coldPass(): Unit = { Fs.rm(s"$work/warm-out"); query("curate-warm.sql", s"$work/warm-out") }
+  def pass(): Unit = query("curate.sql", out)
 
   def output(): (Long, Long) = Fs.partFiles(out)
 
@@ -153,11 +170,13 @@ final class Curate(work: String) extends Workload {
 final class NearDup(work: String, inputs: String, textThreshold: Double,
     vecThreshold: Double) extends Workload {
   private val out = s"$work/out"
+  private var spark: SparkSession = _
   private var docs: DataFrame = _
   private var vecs: DataFrame = _
   val outputs = Seq("survivors", "vec_pairs", "overlap")
 
-  def prepare(spark: SparkSession): Unit = {
+  def prepare(s: SparkSession): Unit = {
+    spark = s
     val (d, v) = NearDup.load(spark, inputs)
     docs = d
     vecs = v
@@ -165,13 +184,23 @@ final class NearDup(work: String, inputs: String, textThreshold: Double,
 
   def clear(): Unit = Fs.rm(out)
 
-  def pass(): Unit = {
+  private def run(d: DataFrame, v: DataFrame, dir: String): Unit = {
     import graft.operators.{Dedup, Similarity, TextOps}
-    def save(df: DataFrame, name: String): Unit = df.write.mode("overwrite").json(s"$out/$name")
-    save(Dedup.nearDupes(docs, "doc_id", "text", textThreshold).select("doc_id"), "survivors")
-    save(Similarity.nearDupesAnnBanded(vecs, vecThreshold), "vec_pairs")
-    save(TextOps.sourceOverlap(docs, "source", "text"), "overlap")
+    def save(df: DataFrame, name: String): Unit = df.write.mode("overwrite").json(s"$dir/$name")
+    save(Dedup.nearDupes(d, "doc_id", "text", textThreshold).select("doc_id"), "survivors")
+    save(Similarity.nearDupesAnnBanded(v, vecThreshold), "vec_pairs")
+    save(TextOps.sourceOverlap(d, "source", "text"), "overlap")
   }
+
+  def coldPass(): Unit = {
+    val (d, v) = NearDup.load(spark, inputs, "-001.jsonl.gz")
+    Fs.rm(s"$work/warm-out")
+    run(d, v, s"$work/warm-out")
+    d.unpersist()
+    v.unpersist()
+  }
+
+  def pass(): Unit = run(docs, vecs, out)
 
   def output(): (Long, Long) = {
     val parts = outputs.map(o => Fs.partFiles(s"$out/$o"))
@@ -180,12 +209,14 @@ final class NearDup(work: String, inputs: String, textThreshold: Double,
 }
 
 object NearDup {
-  /** The seeded text and vector corpora, read once and cached. */
-  def load(spark: SparkSession, inputs: String): (DataFrame, DataFrame) = {
+  /** The seeded text and vector corpora, read once and cached; with a
+    * `part` suffix, only the files of each corpus that end with it.
+    */
+  def load(spark: SparkSession, inputs: String, part: String = ""): (DataFrame, DataFrame) = {
     val docs = spark.read.schema("doc_id long, source string, text string")
-      .json(s"$inputs/near_dup/docs").cache()
+      .json(s"$inputs/near_dup/docs" + (if (part.isEmpty) "" else s"/docs$part")).cache()
     val vecs = spark.read.schema("vec_id long, embedding array<double>")
-      .json(s"$inputs/near_dup/vecs").cache()
+      .json(s"$inputs/near_dup/vecs" + (if (part.isEmpty) "" else s"/vecs$part")).cache()
     docs.count()
     vecs.count()
     (docs, vecs)
@@ -194,11 +225,12 @@ object NearDup {
 
 /** Entry point of the benchmark JVM.
   *
-  * `--mode setup` builds the engine, prints READY and exits: a set-up
-  * sample. `--mode run` then runs untimed warm-up passes, timed passes for
-  * `--seconds`, a forced GC for the live heap, and with `--trace 1` traced
-  * passes and the layer probes. Each pass is preceded, outside its timed
-  * region, by clearing the outputs and a forced GC. The result goes to the
+  * It builds the engine and prints READY (the end of set-up), then runs an
+  * untimed cold pass over a slice of the inputs, untimed warm-up passes,
+  * timed passes for `--seconds`, forced GCs for the live heap, and with
+  * `--trace 1` traced passes and the probes of the workload's layers. Each
+  * pass is preceded, outside its timed region, by clearing the outputs and
+  * a forced GC. The result goes to the
   * JSON file named by `--result`.
   */
 object Bench {
@@ -208,6 +240,28 @@ object Bench {
     .asInstanceOf[com.sun.management.OperatingSystemMXBean]
 
   def gc(): Unit = { System.gc(); System.gc() }
+
+  /** Used heap after forced GCs, repeated until two readings 0.3 s apart
+    * agree within 1 MB (at most 10 rounds): Spark's ContextCleaner frees
+    * broadcast and shuffle state only after a GC, from its own thread.
+    */
+  def liveHeapMb(): Double = {
+    def used(): Double = {
+      gc()
+      ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
+    }
+    var prev = used()
+    Thread.sleep(300)
+    var cur = used()
+    var rounds = 0
+    while (math.abs(cur - prev) > 1.0 && rounds < 10) {
+      prev = cur
+      Thread.sleep(300)
+      cur = used()
+      rounds += 1
+    }
+    cur
+  }
 
   def gcMs: Long = {
     import scala.jdk.CollectionConverters._
@@ -219,8 +273,13 @@ object Bench {
   def codegenCompiles: Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
-  /** What a traced pass adds: Spark totals, GC, JIT and Janino compiles. */
-  final case class PassTrace(spark: Acc, gcS: Double, jitS: Double, compiles: Double)
+  /** What a traced pass adds: Spark totals, GC, JIT, Janino compiles and,
+    * for a pass that enters through `Main.main`, the seconds from the pass's
+    * start to its new SparkContext's application-start event (NaN if the
+    * pass started no SparkContext).
+    */
+  final case class PassTrace(spark: Acc, gcS: Double, jitS: Double, compiles: Double,
+      sessionStartS: Double)
 
   /** One pass: outputs cleared and a GC forced outside the timed region. A
     * traced pass runs inside a span with the listener counting.
@@ -231,6 +290,7 @@ object Bench {
     Probe.on = traced
     val acc0 = Probe.total.copy()
     val (gc0, jit0, cg0) = (gcMs, jitMs, codegenCompiles)
+    Probe.appStartNs = 0L
     val t0 = System.nanoTime()
     val c0 = os.getProcessCpuTime
     if (traced) Trace.span("pass")(w.pass()) else w.pass()
@@ -239,8 +299,9 @@ object Bench {
     val tr = if (!traced) None else {
       Probe.drain()
       Probe.on = false
+      val appStart = Probe.appStartNs
       Some(PassTrace(Probe.total.copy().minus(acc0), (gcMs - gc0) / 1e3, (jitMs - jit0) / 1e3,
-        (codegenCompiles - cg0).toDouble))
+        (codegenCompiles - cg0).toDouble, if (appStart > t0) (appStart - t0) / 1e9 else Double.NaN))
     }
     val (bytes, recs) = w.output()
     (Pass((t1 - t0) / 1e9, (c1 - c0) / 1e9, bytes, recs), tr)
@@ -257,7 +318,6 @@ object Bench {
     val spark = Session.start()
     println("READY")
     System.out.flush()
-    if (a("mode") == "setup") { spark.stop(); return }
 
     val work = a("work")
     val inputs = a("inputs")
@@ -273,11 +333,12 @@ object Bench {
     }
     w.prepare(spark)
 
+    val cold = { val t0 = System.nanoTime(); w.coldPass(); gc(); (System.nanoTime() - t0) / 1e9 }
     val warm = (1 to a("warmup").toInt).map(_ => runPass(w)._1)
 
     // Rounds: a pass plus the workload's extra operations. An untraced run
     // times rounds for `--seconds` (at least `--min_passes`, an odd count); a traced run
-    // alternates 3 untraced and 3 traced rounds, so the tracing overhead is
+    // alternates 2 untraced and 2 traced rounds, so the tracing overhead is
     // measured between neighbouring passes.
     val passes = mutable.ArrayBuffer.empty[Pass]
     val tracedPasses = mutable.ArrayBuffer.empty[(Pass, PassTrace)]
@@ -295,15 +356,12 @@ object Bench {
       reasons ++= why
     }
     val start = System.nanoTime()
-    if (traced) (1 to 6).foreach(i => round(i % 2 == 0))
+    if (traced) (1 to 4).foreach(i => round(i % 2 == 0))
     else
       while (passes.size < minPasses || (System.nanoTime() - start) / 1e9 < seconds ||
           passes.size % 2 == 0)
         round(false)
-    gc()
-    Thread.sleep(200)
-    gc()
-    val heapMb = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
+    val heapMb = liveHeapMb()
 
     val layers = mutable.LinkedHashMap.empty[String, Double]
     if (traced) {
@@ -318,8 +376,10 @@ object Bench {
       layers("spark.spill_mb") = med(_._2.spark.spillBytes / 1048576.0)
       layers("jvm.gc_s") = med(_._2.gcS)
       layers("jvm.jit_s") = med(_._2.jitS)
+      val starts = tracedPasses.map(_._2.sessionStartS).filterNot(_.isNaN).toSeq
+      if (starts.nonEmpty) layers("cli.session_start_s") = median(starts)
       SparkSession.getActiveSession.foreach(_.stop())
-      layers ++= Layers.probe(inputs, a("probe"), a("text_threshold").toDouble,
+      layers ++= Layers.probe(a("workload"), inputs, a("probe"), a("text_threshold").toDouble,
         a("vec_threshold").toDouble)
       Trace.write(s"$work/trace-spans.jsonl")
     }
@@ -328,6 +388,9 @@ object Bench {
     val result = Json.obj(Seq(
       "passes" -> passes.map(p => Map("wall_s" -> p.wall, "cpu_s" -> p.cpu,
         "out_bytes" -> p.outBytes, "out_records" -> p.outRecords)),
+      "traced_passes" -> tracedPasses.map { case (p, t) => Map("wall_s" -> p.wall,
+        "cpu_s" -> p.cpu, "task_cpu_s" -> t.spark.cpuNs / 1e9) },
+      "cold_wall_s" -> cold,
       "warmup_wall_s" -> warm.map(_.wall),
       "heap_live_mb" -> heapMb,
       "attempted" -> attempted,

@@ -22,10 +22,11 @@ import graft.sources.{DelimitedReader, SdfReader}
   * layer is timed by fully evaluating cumulative prefixes with the
   * `bit_xor(xxhash64(struct(*)))` action of `graft.Bench`: the difference
   * between two prefixes is the later step's cost. Every probe runs once
-  * untimed, then [[Reps]] times; a probe's figure is the median.
+  * untimed (except `Main.runIngestion`, which the timed passes have just
+  * warmed), then [[Reps]] times; a probe's figure is the median.
   */
 object Layers {
-  val Reps = 3
+  val Reps = 2
 
   def eval(df: DataFrame): Long = {
     val cols = df.schema.fields.map { f =>
@@ -39,9 +40,9 @@ object Layers {
   }
 
   /** Median seconds of `reps` spans named `name` around `body`. */
-  def timed(name: String, reps: Int = Reps, before: () => Unit = () => ())(body: => Any): Double = {
-    before()
-    body
+  def timed(name: String, reps: Int = Reps, before: () => Unit = () => (),
+      warm: Boolean = true)(body: => Any): Double = {
+    if (warm) { before(); body }
     val secs = (1 to reps).map { _ =>
       before()
       Trace.span(name)(body)
@@ -72,20 +73,31 @@ object Layers {
     xs.sum / xs.size
   }
 
-  def probe(inputs: String, dir: String, textThreshold: Double,
+  /** The probes of the layers `workload` itself calls, over that
+    * workload's inputs. A layer the workload does not call is absent from
+    * the result (the run reports it as 0 s).
+    */
+  def probe(workload: String, inputs: String, dir: String, textThreshold: Double,
       vecThreshold: Double): Map[String, Double] = {
-    val m = mutable.LinkedHashMap.empty[String, Double]
-    val mb = 1048576.0
     Probe.on = true
-
-    m("cli.session_start_s") = Bench.median((1 to Reps).map { _ =>
-      Trace.span("cli.session_start")(Session.build()).stop()
-      Trace.last("cli.session_start").seconds
-    })
     val spark = Session.start()
-    val hconf = spark.sparkContext.hadoopConfiguration
+    try workload match {
+      case "ingest" => ingest(spark, inputs, dir)
+      case "curate" => curate(spark, inputs, dir)
+      case "near_dup" => nearDup(spark, inputs, textThreshold, vecThreshold)
+    } finally spark.stop()
+  }
 
-    // sources, plans, operators and sinks of the ingest path
+  private val mb = 1048576.0
+
+  /** Sources, plans, provenance, sink, checkpoint, report and the CLI's
+    * ingest entry point.
+    */
+  def ingest(spark: SparkSession, inputs: String, dir: String): Map[String, Double] = {
+    val m = mutable.LinkedHashMap.empty[String, Double]
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val job = JobConfig.load(s"$dir/job.yaml")
+
     val sdf = s"$inputs/ingest/pubchem/*.sdf.gz"
     val zinc = s"$inputs/ingest/zinc/*.txt.gz"
     val hash = Provenance.configHash(Fs.read(s"$dir/job.yaml"))
@@ -112,7 +124,7 @@ object Layers {
       "sinks.ndjson_write" -> { () =>
         Fs.rm(sinkDir)
         NdjsonSink.writeNumberedBatches(Provenance.stamp(zincRead(), "zinc", hash, at),
-          sinkDir, "zinc", 5000)
+          sinkDir, "zinc", job.batchSize)
       })
     m("sources.zinc_read_s") = zincTime
     m("sinks.ndjson_write_s") = write
@@ -123,7 +135,6 @@ object Layers {
     m("sinks.output_mb") = Fs.files(sinkDir).filter(_.getName.endsWith(".gz")).map(_.length).sum / mb
 
     // the CLI's ingest entry point, with checkpoint commits counted as they land
-    val job = JobConfig.load(s"$dir/job.yaml")
     val cpRoot = Paths.get(s"${job.checkpointDir}/ingestion-parse")
     val sourceFiles = job.sources.map(s => s"${s.name}.json").toSet
     val commits = mutable.ArrayBuffer.empty[Int]
@@ -145,7 +156,8 @@ object Layers {
       }
       n
     }
-    m("cli.ingest_s") = timed("cli.ingest", reps = 2, before = () => { landed(); resetIngest() }) {
+    m("cli.ingest_s") = timed("cli.ingest", reps = 1, before = () => { landed(); resetIngest() },
+        warm = false) {
       summaries = Main.runIngestion(spark, job)
       commits += landed()
     }
@@ -160,7 +172,12 @@ object Layers {
         s"${job.outputDir}/${s.name}", Seq(".jsonl", ".jsonl.gz"), hconf)))),
         configHash = Some(job.configHash))
     }
+    m.toMap
+  }
 
+  /** The query CLI's planning and execution, and each chemistry UDF alone. */
+  def curate(spark: SparkSession, inputs: String, dir: String): Map[String, Double] = {
+    val m = mutable.LinkedHashMap.empty[String, Double]
     // the query CLI: registration, parse, analysis and physical plan, then execution
     val sql = Fs.read(s"$dir/curate.sql")
     var df: DataFrame = null
@@ -182,8 +199,13 @@ object Layers {
         m(s"${name}_s") = timed(name)(eval(mols.selectExpr(s"$f(smiles) AS r")))
       }
     mols.unpersist()
+    m.toMap
+  }
 
-    // the pair operators
+  /** The pair operators over the cached corpora, and the LSH yield. */
+  def nearDup(spark: SparkSession, inputs: String, textThreshold: Double,
+      vecThreshold: Double): Map[String, Double] = {
+    val m = mutable.LinkedHashMap.empty[String, Double]
     val (docs, vecs) = NearDup.load(spark, inputs)
     m("operators.minhash_candidates_s") = timed("operators.minhash_candidates")(
       eval(Dedup.minHashCandidates(docs, "doc_id", "text", 8, 4)))
@@ -196,7 +218,6 @@ object Layers {
       eval(Similarity.nearDupesAnnBanded(vecs, vecThreshold)))
     m("operators.source_overlap_s") = timed("operators.source_overlap")(
       eval(TextOps.sourceOverlap(docs, "source", "text")))
-    spark.stop()
     m.toMap
   }
 }

@@ -2,7 +2,8 @@ package perfbench
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationStart,
+  SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Spans recorded around each call the benchmark makes into a layer.
@@ -106,6 +107,9 @@ final class Acc {
   * it. It counts nothing until [[Probe.on]] is set.
   */
 class Probe extends SparkListener {
+  override def onApplicationStart(e: SparkListenerApplicationStart): Unit =
+    Probe.appStartNs = System.nanoTime()
+
   override def onJobStart(e: SparkListenerJobStart): Unit = if (Probe.on) {
     val span = Option(e.properties).flatMap(p => Option(p.getProperty(Trace.Prop)))
       .map(_.toInt).getOrElse(0)
@@ -131,6 +135,8 @@ class Probe extends SparkListener {
 
 object Probe {
   @volatile var on = false
+  /** When the last SparkContext's application-start event arrived. */
+  @volatile var appStartNs = 0L
   private[perfbench] val stageSpan = scala.collection.concurrent.TrieMap.empty[Int, Int]
   private val bySpan = mutable.Map.empty[Int, Acc]
   val total = new Acc
