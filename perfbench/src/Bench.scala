@@ -337,7 +337,7 @@ object Bench {
     val warm = (1 to a("warmup").toInt).map(_ => runPass(w)._1)
 
     // Rounds: a pass plus the workload's extra operations. An untraced run
-    // times rounds for `--seconds` (at least `--min_passes`, an odd count); a traced run
+    // times rounds for `--seconds`, at least `--min_passes` of them; a traced run
     // alternates 2 untraced and 2 traced rounds, so the tracing overhead is
     // measured between neighbouring passes.
     val passes = mutable.ArrayBuffer.empty[Pass]
@@ -358,8 +358,7 @@ object Bench {
     val start = System.nanoTime()
     if (traced) (1 to 4).foreach(i => round(i % 2 == 0))
     else
-      while (passes.size < minPasses || (System.nanoTime() - start) / 1e9 < seconds ||
-          passes.size % 2 == 0)
+      while (passes.size < minPasses || (System.nanoTime() - start) / 1e9 < seconds)
         round(false)
     val heapMb = liveHeapMb()
 

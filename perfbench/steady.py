@@ -1,6 +1,6 @@
 """Steadiness mode: N back-to-back runs of each workload, one seed each.
 
-    python3 perfbench/run.py --steady 10 --seconds 6 [--seed 1] [--workloads ingest,curate]
+    python3 perfbench/run.py --steady 10 --seconds 12 [--seed 1] [--workloads ingest,curate]
 
 Prints, per workload and end-to-end metric, the median, the quartiles (as
 `statistics.quantiles(values, n=4)` gives them), the quartile spread and the
