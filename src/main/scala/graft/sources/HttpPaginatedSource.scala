@@ -61,11 +61,12 @@ object HttpPaginatedSource {
     while (!done && pages < maxPages) {
       val page = fetch(cursor)
       if (page.records.nonEmpty) {
-        val ds: Dataset[MoleculeRecord] = spark.createDataset(page.records)
-        NdjsonSink.writeNumberedBatches(ds.toDF(), outDir, sourceName,
+        // one partition, so the page is exactly one batch (the sink ends
+        // a batch at every partition boundary)
+        val ds: Dataset[MoleculeRecord] = spark.createDataset(page.records).coalesce(1)
+        batchIndex += NdjsonSink.writeNumberedBatches(ds.toDF(), outDir, sourceName,
           batchSize = math.max(1, page.records.size), compress = compress,
-          startBatch = batchIndex)
-        batchIndex += 1
+          startBatch = batchIndex).batches.toInt
         written += page.records.size
       }
       pages += 1

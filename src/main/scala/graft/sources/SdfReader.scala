@@ -34,10 +34,24 @@ object SdfReader {
     val rdd = spark.sparkContext
       .newAPIHadoopFile(paths, classOf[TextInputFormat],
         classOf[LongWritable], classOf[Text], conf)
+      .filter { case (_, t) => !isBlank(t.getBytes, t.getLength) }
       .map { case (_, t) => t.toString }
     rdd.toDF("record")
-      // trim() strips spaces only — newline-only tail records need \s
-      .filter(length(regexp_replace(col("record"), "^\\s+|\\s+$", "")) > 0)
+  }
+
+  /** True when the first `len` UTF-8 bytes hold only `[ \t\n\x0B\f\r]`,
+    * the class of Java's regex `\s` (so newline-only tail records are
+    * dropped). Every other character, e.g. U+2003, has a byte outside
+    * that class; `String.isBlank` would count it as blank.
+    */
+  private[graft] def isBlank(bytes: Array[Byte], len: Int): Boolean = {
+    var i = 0
+    while (i < len) {
+      val b = bytes(i)
+      if (b != ' ' && (b < '\t' || b > '\r')) return false
+      i += 1
+    }
+    true
   }
 
   /** `> <TAG>` property blocks of one SDF record as Map[String,String].

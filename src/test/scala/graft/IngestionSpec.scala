@@ -232,6 +232,23 @@ class IngestionSpec extends SparkSpec {
     assert(r3.completed && fetches === before)
   }
 
+  test("paginated source: each page is one batch on a multi-core session") {
+    val dir = tmpDir("http_pages")
+    def rec(i: Int) = MoleculeRecord("cs", s"id$i", "C" * (i % 7 + 1), Map.empty)
+    def page(p: Int) = HttpPaginatedSource.Page((5 * p + 1 to 5 * p + 5).map(rec),
+      if (p < 2) Some(Map("page" -> (p + 1).toString)) else None)
+    val res = HttpPaginatedSource.run(spark, "cs", c => page(c.getOrElse("page", "0").toInt),
+      Map.empty, s"$dir/out", s"$dir/cp", compress = false)
+    assert(res.completed && res.pagesFetched === 3 && res.recordsWritten === 15)
+    val files = Files.list(Paths.get(s"$dir/out/cs")).toArray.map(_.toString)
+      .filter(_.endsWith(".jsonl")).sorted.toSeq
+    assert(files.map(f => f.substring(f.length - 12)) ===
+      Seq("000001.jsonl", "000002.jsonl", "000003.jsonl"))
+    val ids = spark.read.json(files: _*).select("identifier").collect().map(_.getString(0))
+    assert(ids.length === 15 && ids.distinct.length === 15)
+    assert(JobManifest.load(s"$dir/cp", "cs").get.batchIndex === 3)
+  }
+
   test("download phase: manifest mirror with fake runner, checkpoint skip on rerun") {
     val dir = tmpDir("dl")
     Files.writeString(Paths.get(s"$dir/links.txt"),
@@ -285,7 +302,9 @@ class IngestionSpec extends SparkSpec {
     // crash after the first wave (2 of 5 files)
     val (b1, r1) = Main.ingestFilesResumable(spark, job, spec, cpRoot,
       Main.readers("delimited"), maxWaves = 1)
-    assert(r1 === 2 && b1 === 1)
+    // one batch per input partition (one per file here), as the
+    // reference flushes a partial batch at the end of every file
+    assert(r1 === 2 && b1 === 2)
     val cp = JobManifest.load(cpRoot, "zinc").get
     assert(cp.cursor("files_done") === "2" && !cp.completed)
 

@@ -63,6 +63,19 @@ class SdfReaderSpec extends SparkSpec {
     assert(df.count() === 2)
   }
 
+  test("blank tail records are dropped by the \\s class, a U+2003-only record is kept") {
+    val dir = tmpDir("sdf_blank")
+    val head = sdfEntry("CID1", "C") + "\n$$$$\n"
+    Files.writeString(Paths.get(s"$dir/ws.sdf"), head + " \t\u000b\f\r \n")
+    Files.writeString(Paths.get(s"$dir/nl.sdf"), head + "\n\n\n")
+    Files.writeString(Paths.get(s"$dir/em.sdf"), head + " ")
+    def records(f: String) =
+      SdfReader.readRecords(spark, s"$dir/$f").collect().map(_.getString(0)).toSeq
+    assert(records("ws.sdf").size === 1, "whitespace-only tail record dropped")
+    assert(records("nl.sdf").size === 1, "newline-only tail record dropped")
+    assert(records("em.sdf").drop(1) === Seq("\n "), "U+2003 is not \\s: record kept")
+  }
+
   test("property parser edge cases: multi-line values, malformed tag line, missing tags") {
     val props = SdfReader.parseProps(
       "mol\nM  END\n> <A>\nline1\nline2\n\n>broken-no-angle\n> <B>\n  spaced  \n")
