@@ -323,6 +323,17 @@ object Main {
     } finally pool.shutdown()
   }
 
+  /** `pipeline run|resume`: registers the engine's SQL functions (the
+    * same registry `query` uses, so a `map` stage can call
+    * `is_valid_smiles`) and runs the declared stage DAG.
+    */
+  def runPipeline(spark: SparkSession, configPath: String, resume: Boolean,
+      vars: Map[String, String]): graft.pipeline.PipelineRunner.RunResult = {
+    QueryCommand.registerFunctions(spark)
+    graft.pipeline.PipelineRunner.run(spark,
+      graft.pipeline.PipelineConfig.load(configPath), resume = resume, vars = vars)
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: graft.cli.Main <download|ingest> <config.yaml> | " +
@@ -358,9 +369,7 @@ object Main {
             case "resume" => true
             case o => throw new IllegalArgumentException(s"unknown pipeline command '$o'")
           }
-          val p = graft.pipeline.PipelineConfig.load(args(2))
-          val res = graft.pipeline.PipelineRunner.run(spark, p,
-            resume = resume, vars = sys.env.toMap)
+          val res = runPipeline(spark, args(2), resume, sys.env.toMap)
           res.stages.foreach(s => println(s"${s.name} [${s.kind}]: ${s.action}"))
           if (!res.completed) throw new IllegalStateException(
             "pipeline halted before all stages completed")

@@ -10,6 +10,11 @@ import graft.sources.SdfReader
   * function surface. Column-composition functions (TextFunctions,
   * VectorFunctions) need no registration — they compile to built-in
   * expressions available in SQL already.
+  *
+  * This is the one list of chemistry UDFs: the `query` and `pipeline`
+  * CLI commands reach it through `QueryCommand.registerFunctions`.
+  * `log_p`/`tpsa` and `smiles_logp`/`smiles_tpsa` are the same two
+  * descriptors under both names SQL texts use.
   */
 object Functions {
 
@@ -21,6 +26,8 @@ object Functions {
     r.register("strip_salt", Chemistry.stripSalt _)
     r.register("smiles_logp", (s: String) => Chemistry.descriptors(s).map(_.logP))
     r.register("smiles_tpsa", (s: String) => Chemistry.descriptors(s).map(_.tpsa))
+    r.register("log_p", (s: String) => Chemistry.descriptors(s).map(_.logP))
+    r.register("tpsa", (s: String) => Chemistry.descriptors(s).map(_.tpsa))
     r.register("lipinski_ok", (s: String) => Chemistry.descriptors(s).exists(_.lipinskiOk))
     r.register("morgan_fp", (s: String) => Chemistry.morganBits(s))
     r.register("structural_keys", (s: String) => Chemistry.structuralKeys(s))

@@ -208,15 +208,19 @@ object Chemistry {
     else frags.sortBy(f => (-parse(f).map(_.atoms.length).getOrElse(0), f)).head
   }
 
+  private val isotopePrefix = java.util.regex.Pattern.compile("\\[(\\d+)")
+
   /** Deterministic normalization for dedup keys: salt strip + drop
     * stereo (@, /, \\) and isotope digits inside brackets. NOT a true
     * canonical SMILES (no Morgan relabeling) — documented approximation.
     */
   def normalize(smiles: String): String = {
     val base = stripSalt(smiles)
-    base.replace("@", "").replace("/", "").replace("\\", "")
-      .replaceAll("\\[(\\d+)", "[")
+    isotopePrefix.matcher(
+      base.replace("@", "").replace("/", "").replace("\\", "")).replaceAll("[")
   }
+
+  private val halogens = Set("F", "Cl", "Br", "I")
 
   final case class Descriptors(
       mw: Double, heavyAtoms: Int, carbons: Int, nitrogens: Int,
@@ -230,7 +234,7 @@ object Chemistry {
     val atoms = m.atoms
     def cnt(sym: String) = atoms.count(_.symbol == sym)
     val c = cnt("C"); val n = cnt("N"); val o = cnt("O")
-    val hal = atoms.count(a => Set("F", "Cl", "Br", "I")(a.symbol))
+    val hal = atoms.count(a => halogens(a.symbol))
     val s = cnt("S")
     val hbd = atoms.count(a =>
       (a.symbol == "N" || a.symbol == "O") && (implicitH(a) + a.explicitH) > 0)
@@ -245,28 +249,85 @@ object Chemistry {
       mw <= 500 && logP <= 5 && hbd <= 5 && hba <= 10)
   }
 
-  /** Morgan-flavored hashed circular fingerprint: for radii 0..r each
-    * atom's neighborhood string (sorted neighbor symbols per shell) is
-    * hashed into `nBits`. Returns sorted distinct set bit indices.
+  /** Morgan-flavored hashed circular fingerprint. Atom `i`'s radius-0
+    * environment string is its symbol; its radius-k string is the
+    * radius-(k-1) string, `|`, and the symbols of every atom within k
+    * bonds of `i` (each atom once, `i` included) sorted in natural
+    * `String` order and concatenated. Each environment for k in
+    * 0..`radius` sets bit `floorMod(MurmurHash3.stringHash(env), nBits)`.
+    * Returns the set bit indices, sorted and distinct; `None` when the
+    * SMILES does not parse.
+    *
+    * The shells grow in place (one array of members, a per-atom stamp
+    * as the visited set) into one reused builder, and the bits collect
+    * in a bitmap; the output is bit-identical to building each shell as
+    * an immutable set and each environment as a fresh string (the
+    * reference oracle in `ChemistrySpec`).
     */
-  def morganBits(smiles: String, radius: Int = 2, nBits: Int = 1024): Option[Array[Int]] =
+  def morganBits(smiles: String, radius: Int = 2, nBits: Int = 1024): Option[Array[Int]] = {
+    require(nBits > 0, s"nBits must be positive, got $nBits")
     parse(smiles).map { m =>
-      val envs = scala.collection.mutable.ArrayBuffer.empty[String]
-      m.atoms.indices.foreach { i =>
-        var shell = Set(i)
-        var repr = m.atoms(i).symbol
-        envs += repr
-        (1 to radius).foreach { _ =>
-          val next = shell.flatMap(j => m.atoms(j).neighbors).toSet ++ shell
-          repr = repr + "|" +
-            next.toSeq.map(j => m.atoms(j).symbol).sorted.mkString("")
-          envs += repr
-          shell = next
-        }
+      val n = m.atoms.length
+      val sym = m.atoms.iterator.map(_.symbol).toArray
+      val nbr = m.atoms.iterator.map(_.neighbors.toArray).toArray
+      val stamp = new Array[Int](n) // stamp(j) == i + 1: j is in atom i's shell
+      val shell = new Array[Int](n)
+      val shellSyms = new Array[String](n)
+      val words = new Array[Long]((nBits + 63) >>> 6)
+      val env = new java.lang.StringBuilder
+      def setBit(e: String): Unit = {
+        val b = math.floorMod(scala.util.hashing.MurmurHash3.stringHash(e), nBits)
+        words(b >>> 6) |= 1L << b
       }
-      envs.map(e => math.floorMod(scala.util.hashing.MurmurHash3.stringHash(e), nBits))
-        .distinct.sorted.toArray
+      var i = 0
+      while (i < n) {
+        stamp(i) = i + 1
+        shell(0) = i
+        var size = 1
+        env.setLength(0)
+        env.append(sym(i))
+        setBit(sym(i))
+        var r = 0
+        while (r < radius) {
+          val old = size
+          var k = 0
+          while (k < old) {
+            val ns = nbr(shell(k))
+            var q = 0
+            while (q < ns.length) {
+              val j = ns(q)
+              if (stamp(j) != i + 1) { stamp(j) = i + 1; shell(size) = j; size += 1 }
+              q += 1
+            }
+            k += 1
+          }
+          k = 0
+          while (k < size) { shellSyms(k) = sym(shell(k)); k += 1 }
+          // natural String order, the order `.sorted` gives
+          java.util.Arrays.sort(shellSyms.asInstanceOf[Array[AnyRef]], 0, size)
+          env.append('|')
+          k = 0
+          while (k < size) { env.append(shellSyms(k)); k += 1 }
+          setBit(env.toString)
+          r += 1
+        }
+        i += 1
+      }
+      val out = new Array[Int](words.iterator.map(java.lang.Long.bitCount).sum)
+      var o = 0
+      var w = 0
+      while (w < words.length) {
+        var word = words(w)
+        while (word != 0L) {
+          out(o) = (w << 6) + java.lang.Long.numberOfTrailingZeros(word)
+          o += 1
+          word &= word - 1
+        }
+        w += 1
+      }
+      out
     }
+  }
 
   /** MACCS-flavored structural key bits from substructure heuristics. */
   def structuralKeys(smiles: String): Option[Array[Int]] = parse(smiles).map { m =>
@@ -276,7 +337,7 @@ object Chemistry {
     if (has("N")) out += 1
     if (has("O")) out += 2
     if (has("S")) out += 3
-    if (m.atoms.exists(a => Set("F", "Cl", "Br", "I")(a.symbol))) out += 4
+    if (m.atoms.exists(a => halogens(a.symbol))) out += 4
     if (m.ringBonds > 0) out += 5
     if (m.atoms.exists(_.aromatic)) out += 6
     if (m.atoms.exists(_.bondOrderSum >= 2.0)) out += 7

@@ -225,6 +225,46 @@ class PipelineRunnerSpec extends SparkSpec {
     assert(row.getLong(1) === 2L * (2 to 20 by 2).map(_ * 10).sum)
   }
 
+  test("`pipeline run` registers the engine functions a map stage calls") {
+    import spark.implicits._
+    val dir = tmpDir("pipe_chem")
+    Seq(("m1", "CCO"), ("m2", "OCC.[Na+]"), ("m3", "C[C@H](N)O"), ("m4", "CC("))
+      .toDF("identifier", "smiles")
+      .write.mode("overwrite").json(s"$dir/mols")
+    val yamlPath = java.nio.file.Paths.get(dir, "pipeline.yaml")
+    java.nio.file.Files.writeString(yamlPath,
+      s"""pipeline:
+         |  name: curate
+         |  stages:
+         |    - {name: mols, type: scan, format: json, path: $dir/mols}
+         |    - name: curated
+         |      type: map
+         |      input: mols
+         |      columns:
+         |        valid: is_valid_smiles(smiles)
+         |        norm: normalize_smiles(smiles)
+         |    - {name: kept, type: filter, input: curated, condition: valid}
+         |    - name: groups
+         |      type: reduce
+         |      input: kept
+         |      group_by: [norm]
+         |      aggs:
+         |        n_members: count(*)
+         |        keeper: min(identifier)
+         |    - {name: out, type: sink, input: groups, format: json, path: $dir/out}
+         |""".stripMargin)
+    // a new session's function registry holds only the built-ins, as in
+    // a fresh `graft.cli.Main pipeline run` process
+    val fresh = spark.newSession()
+    assert(!fresh.catalog.functionExists("is_valid_smiles"))
+    val res = graft.cli.Main.runPipeline(fresh, yamlPath.toString, resume = false,
+      vars = Map.empty)
+    assert(res.completed)
+    val got = fresh.read.json(s"$dir/out").select("norm", "n_members", "keeper")
+      .as[(String, Long, String)].collect().sortBy(_._1).toSeq
+    assert(got === Seq(("CCO", 1L, "m1"), ("C[CH](N)O", 1L, "m3"), ("OCC", 1L, "m2")))
+  }
+
   test("undefined ${VAR} in a path fails loudly") {
     val spec = PipelineConfig.parse(
       """pipeline:

@@ -100,6 +100,29 @@ class QueryCliSpec extends SparkSpec {
     assert(out(3)._3 == "CC(=O)O", s"salt stripped: ${out(3)}")
   }
 
+  test("registerFunctions resolves every engine SQL function on an empty registry") {
+    val fresh = spark.newSession()
+    assert(!fresh.catalog.functionExists("is_valid_smiles"))
+    QueryCommand.registerFunctions(fresh)
+    val r = fresh.sql(
+      """SELECT is_valid_smiles('CCO'), round(molecular_weight('CCO'), 3),
+        |  normalize_smiles('[13C]CO'), strip_salt('CCO.[Na+]'),
+        |  smiles_logp('CC(=O)O'), log_p('CC(=O)O'),
+        |  smiles_tpsa('CC(=O)O'), tpsa('CC(=O)O'),
+        |  lipinski_ok('CCO'), size(morgan_fp('CCO')), structural_keys('CC(=O)O'),
+        |  format_bytes(2048), size(ws_tokens('a b'))""".stripMargin).collect()(0)
+    assert(r.getBoolean(0) && r.getDouble(1) === 46.069)
+    assert(r.getString(2) === "[C]CO" && r.getString(3) === "CCO")
+    assert(r.getDouble(4) === -0.3 && r.getDouble(5) === -0.3)
+    assert(r.getDouble(6) === 34.2 && r.getDouble(7) === 34.2)
+    assert(r.getBoolean(8))
+    assert(r.getInt(9) === graft.functions.Chemistry.morganBits("CCO").get.length)
+    assert(r.getSeq[Int](10) === graft.functions.Chemistry.structuralKeys("CC(=O)O").get.toSeq)
+    assert(r.getString(11) === "2.00 KB" && r.getInt(12) === 2)
+    assert(fresh.sessionState.tableFunctionRegistry.functionExists(
+      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_policy_gate")))
+  }
+
   test("CLI execute: @file SQL, --out parquet landing, TSV print") {
     val sqlFile = java.nio.file.Paths.get(tmpDir("query_cli_sql"), "q.sql")
     java.nio.file.Files.writeString(sqlFile,
