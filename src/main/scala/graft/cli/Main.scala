@@ -334,11 +334,20 @@ object Main {
       graft.pipeline.PipelineConfig.load(configPath), resume = resume, vars = vars)
   }
 
+  /** The CLI entry point. Builds a session with the CLI's settings and
+    * stops it at the end, unless a usable session (active or default)
+    * already existed: then `getOrCreate` returns that caller's session,
+    * which is used and left running. A reused session keeps the
+    * CLI's runtime SQL settings (32 shuffle partitions, UTC session time
+    * zone) and the WARN log level after the call.
+    */
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: graft.cli.Main <download|ingest> <config.yaml> | " +
         "pipeline <run|resume> <pipeline.yaml> | " +
         "query <sql|@file> [--data dir] [--table name=path]... [--out dir]")
+    val callerSession = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .filterNot(_.sparkContext.isStopped)
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
       .appName("graft-ingest")
@@ -383,6 +392,6 @@ object Main {
         case other =>
           throw new IllegalArgumentException(s"unknown command '$other'")
       }
-    } finally spark.stop()
+    } finally if (callerSession.isEmpty) spark.stop()
   }
 }

@@ -13,8 +13,12 @@ import org.apache.spark.sql.functions._
   * and a re-ingest under a changed config is distinguishable row-by-row
   * (golden-specced in IngestionSpec).
   *
-  * Stamping is a pure codegen'd projection (map_concat of literals) —
-  * no UDF, no shuffle; at 100 TB it rides the ingest scan for free.
+  * Stamping is one projection — no UDF, no shuffle — that rides the
+  * ingest scan: `map_concat` of the filtered map and a literal map.
+  * It is not all generated code: `map_filter` is `CodegenFallback`, so
+  * its lambda runs interpreted per row inside the stage. Over the
+  * 78 629 rows of the benchmark's ZINC tranches (seed 7), one thread,
+  * stamping added about 0.22 s to a 0.37 s native read (medians of 9).
   * Re-stamping is idempotent: prior provenance keys are filtered out
   * before the concat, so map_concat can never hit a duplicate key.
   */

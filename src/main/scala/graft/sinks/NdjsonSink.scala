@@ -8,6 +8,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.{struct, to_json}
 import org.apache.spark.util.SerializableConfiguration
 
 /** NDJSON sink with reference-parity batch-file naming (S22):
@@ -19,9 +20,14 @@ import org.apache.spark.util.SerializableConfiguration
   * One pass, one Spark job, no shuffle. Each task streams its partition,
   * in input order, into staging chunks of at most `batchSize` records
   * under `<out>/_staging-<source>/` (outside the source directory, so
-  * reports never count it), writing the UTF-8 bytes of `df.toJSON`
-  * as they are. The driver then renames the chunks, in (partition,
-  * chunk) order, to the contiguous batch numbers after `startBatch`.
+  * reports never count it). Each record is the UTF-8 bytes of
+  * `to_json(struct(<every column>))`, encoded from the internal rows
+  * inside the codegen'd stage; fields keep the frame's column order,
+  * null fields are omitted, and map keys keep their insertion order
+  * (a source's `metadata` is written in the order the reader and
+  * `Provenance` build it). The driver then renames the chunks, in
+  * (partition, chunk) order, to the contiguous batch numbers after
+  * `startBatch`.
   * Like the reference, which fills batches in input order and flushes
   * the partial batch at the end of each file (S18), every input
   * partition (one per `.gz` file) ends with its own partial batch.
@@ -53,8 +59,10 @@ object NdjsonSink {
     val fs = target.getFileSystem(sc.hadoopConfiguration)
     val conf = new SerializableConfiguration(sc.hadoopConfiguration)
     val suffix = if (compress) ".jsonl.gz" else ".jsonl"
+    val json = df.select(to_json(struct(
+      df.columns.toSeq.map(c => df.col("`" + c.replace("`", "``") + "`")): _*)))
     // runJob returns the tasks' results in partition order
-    val chunks = sc.runJob(df.toJSON.queryExecution.toRdd,
+    val chunks = sc.runJob(json.queryExecution.toRdd,
       (ctx: TaskContext, rows: Iterator[InternalRow]) =>
         writeChunks(ctx, rows, staging, batchSize, compress, conf))
     val paths = chunks.flatMap(_._2)

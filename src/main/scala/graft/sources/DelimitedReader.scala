@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.Schemas
+import graft.plans.DelimitedRowExpr
 
 /** ZINC-style delimited tranche source (S3/S15–S17): headerless
   * plain or gzip SMILES tables, configurable delimiter (None → any
@@ -12,56 +12,28 @@ import graft.model.Schemas
   * Reference semantics: /root/reference/src/open_molecule_data_pipeline/
   * ingestion/zinc.py:174-229.
   *
-  * Spark-first: the reference's per-line Python loop becomes a
-  * columnar split + projection per file task, with .gz handled by the
-  * codec layer and provenance (`source_file`) supplied natively by
-  * `input_file_name()`.
+  * Spark-first: the reference's per-line Python loop becomes a text
+  * scan per file task feeding one native kernel,
+  * `plans.DelimitedRowExpr`, which splits each line on the literal
+  * separator (or on whitespace runs), applies the three drop rules and
+  * builds `struct(identifier, smiles, metadata)` directly, NULL for a
+  * dropped row. `.gz` is handled by the codec layer and provenance
+  * (`source_file`) is supplied natively by `input_file_name()`. The
+  * plan is scan → kernel → `isnotnull` filter → projection, one
+  * codegen'd stage with no shuffle.
   */
 object DelimitedReader {
 
   def read(spark: SparkSession, paths: String, sourceName: String,
       delimiter: Option[String] = Some("\t"),
-      smilesColumn: Int = 0, identifierColumn: Int = 1): DataFrame = {
+      smilesColumn: Int = 0, identifierColumn: Int = 1): DataFrame =
     // comma-separated path lists accepted, matching the SDF reader's
     // Hadoop-input behavior (the CLI's resumable waves pass them);
     // brace-glob patterns pass through unsplit (PathPatterns)
-    val raw = spark.read.text(PathPatterns.split(paths): _*)
-      .select(col("value"), input_file_name().as("source_file"))
-      .filter(length(trim(col("value"))) > 0)                     // S16: blank lines
-    val parts = delimiter match {
-      case Some(sep) =>
-        raw.select(split(col("value"),
-          java.util.regex.Pattern.quote(sep)).as("parts"), col("source_file"))
-      case None =>
-        // trim() strips spaces only — a tab-led line would otherwise
-        // split into a leading empty token and shift the column indices
-        raw.select(split(regexp_replace(col("value"), "^\\s+|\\s+$", ""), "\\s+")
-          .as("parts"), col("source_file"))
-    }
-    val needed = math.max(smilesColumn, identifierColumn) + 1
-    // guarded access: ANSI mode turns out-of-bounds array indexing into
-    // an error, and predicate reordering could evaluate these before the
-    // size filter
-    def item(i: Int) =
-      when(size(col("parts")) > i, col("parts").getItem(i)).otherwise(lit(""))
-    val smilesC = trim(item(smilesColumn))
-    val idC = trim(item(identifierColumn))
-    parts
-      .filter(size(col("parts")) >= needed)                       // S17: too few columns
-      .filter(smilesC =!= "" && idC =!= "")                       // S17: empty key cells
-      .select(
-        lit(sourceName).as("source"),
-        idC.as("identifier"),
-        smilesC.as("smiles"),
-        map_concat(
-          map(lit("source_file"), col("source_file")),
-          map_from_entries(filter(
-            transform(sequence(lit(0), size(col("parts")) - 1), i =>
-              struct(concat(lit("column_"), i.cast("string")).as("key"),
-                col("parts").getItem(i).as("value"))),
-            e => e.getField("key") =!= lit(s"column_$smilesColumn")
-              && e.getField("key") =!= lit(s"column_$identifierColumn")))
-        ).as("metadata"))
-      .select(Schemas.molecule.fieldNames.map(col).toSeq: _*)
-  }
+    spark.read.text(PathPatterns.split(paths): _*)
+      .select(DelimitedRowExpr.delimited_row(col("value"), input_file_name(),
+        delimiter, smilesColumn, identifierColumn).as("row"))
+      .filter(col("row").isNotNull)
+      .select(lit(sourceName).as("source"), col("row.identifier"), col("row.smiles"),
+        col("row.metadata"))
 }

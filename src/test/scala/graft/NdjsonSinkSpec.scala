@@ -8,6 +8,7 @@ import java.util.zip.GZIPOutputStream
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.functions.{col, lit, map}
 
 import graft.checkpoint.JobManifest
 import graft.cli.Main
@@ -88,6 +89,60 @@ class NdjsonSinkSpec extends SparkSpec {
     byFile.values.foreach(ids => assert(ids === ids.sorted && ids.distinct.size === 23))
     assert(all.map(_.takeWhile(_ != '_')).sliding(2).count(p => p.head != p.last) === 1)
     assert(!Files.exists(Paths.get(s"$dir/out/_staging-zinc")), "no staging left behind")
+  }
+
+  // --- encoding: to_json over the internal rows --------------------
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper
+
+  /** The lines of every batch of `out/source`, in batch order. */
+  private def batchLines(out: String, source: String): Seq[String] =
+    Files.list(Paths.get(s"$out/$source")).iterator().asScala.toSeq.map(_.toString)
+      .filter(_.endsWith(".jsonl")).sorted.flatMap(p => lines(Paths.get(p)))
+
+  test("each record is toJSON's line; maps of 5+ entries keep insertion order") {
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
+    val df = spark.sql(
+      """SELECT id, name, d,
+        |  named_struct('a', id, 'b', name, 'c', array(1.5D, CAST(NULL AS DOUBLE))) AS s,
+        |  array(name, NULL, 'x') AS arr,
+        |  TIMESTAMP'2026-01-02 03:04:05.123456' + make_interval(0, 0, 0, id) AS ts,
+        |  IF(id = 2, NULL, map('k1', name, 'k2', 'v', 'k3', 'w', 'k4', '')) AS m
+        |FROM VALUES (1, 'a', 1.0D), (2, NULL, -0.0D), (3, 'q"\\', 1e300D),
+        |  (4, 'tab\tcré😀', CAST('NaN' AS DOUBLE)),
+        |  (5, NULL, CAST('-Infinity' AS DOUBLE)), (6, '', 0.1D) AS t(id, name, d)
+        |""".stripMargin)
+      .withColumnRenamed("name", "a.b").withColumnRenamed("d", "x`y")
+    val dir = tmpDir("sink_json")
+    NdjsonSink.writeNumberedBatches(df, s"$dir/out", "j", 4, compress = false)
+    val got = batchLines(s"$dir/out", "j")
+    assert(got === df.toJSON.collect().toSeq, "byte-identical to toJSON")
+    assert(got.exists(_.contains("\"a.b\":\"a\"")) && got.forall(_.contains("\"x`y\":")),
+      "names with a dot or a backtick round-trip")
+    assert(!got(1).contains("\"m\"") && !got(1).contains("\"a.b\""), "null fields omitted")
+
+    val keys = (1 to 7).map(i => s"k$i")
+    val big = df.select(col("id"), map(keys.flatMap(k => Seq(lit(k), col("`a.b`"))): _*).as("m"))
+    NdjsonSink.writeNumberedBatches(big, s"$dir/out", "big", 4, compress = false)
+    val bigGot = batchLines(s"$dir/out", "big")
+    val bigWant = big.toJSON.collect().toSeq
+    assert(bigGot.size === bigWant.size)
+    bigGot.zip(bigWant).foreach { case (g, w) =>
+      assert(json.readTree(g) === json.readTree(w), "the same JSON value")
+      assert(json.readTree(g).get("m").fieldNames().asScala.toSeq === keys, "insertion order")
+    }
+  }
+
+  test("a stamped ZINC record's metadata keys come out in the order they were built") {
+    val dir = tmpDir("sink_order")
+    Files.writeString(Paths.get(s"$dir/z.txt"), "C\tZ1\t180.2\t1.5\n")
+    val df = graft.operators.Provenance.stamp(DelimitedReader.read(spark, s"$dir/z.txt", "zinc"),
+      "zinc", "0" * 32, "2026-01-01T00:00:00Z")
+    NdjsonSink.writeNumberedBatches(df, s"$dir/out", "zinc", 10, compress = false)
+    val Seq(line) = batchLines(s"$dir/out", "zinc")
+    assert(json.readTree(line).get("metadata").fieldNames().asScala.toSeq === Seq(
+      "source_file", "column_2", "column_3", "_prov_source", "_prov_config_hash",
+      "_prov_ingested_at"))
   }
 
   // --- exactly-once resume: a crash of the second wave, planted as the

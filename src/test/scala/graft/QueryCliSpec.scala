@@ -123,6 +123,17 @@ class QueryCliSpec extends SparkSpec {
       org.apache.spark.sql.catalyst.FunctionIdentifier("graft_policy_gate")))
   }
 
+  test("Main.main runs on the caller's session and leaves it running") {
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.session.timeZone")
+    val before = keys.map(k => k -> spark.conf.get(k))
+    val printed = new java.io.ByteArrayOutputStream
+    try Console.withOut(printed)(graft.cli.Main.main(Array("query", "SELECT 1 AS x")))
+    finally before.foreach { case (k, v) => spark.conf.set(k, v) }
+    assert(printed.toString("UTF-8").trim === "x\n1")
+    assert(!spark.sparkContext.isStopped, "the caller's session is not stopped")
+    assert(spark.sql("SELECT 2 AS y").collect().head.getInt(0) === 2)
+  }
+
   test("CLI execute: @file SQL, --out parquet landing, TSV print") {
     val sqlFile = java.nio.file.Paths.get(tmpDir("query_cli_sql"), "q.sql")
     java.nio.file.Files.writeString(sqlFile,
