@@ -51,8 +51,17 @@ object JobManifest {
     val f = fs(p, conf)
     f.mkdirs(p.getParent)
     val tmp = new Path(p.getParent, s".${source}.json.tmp")
-    val out = f.create(tmp, true)
+    // written without a `.crc` sidecar on the local file system; any
+    // sidecar an older run left for the checkpoint or its temporary
+    // file goes before the commit (the rename would carry the latter
+    // along), so none ever sits next to the new contents
+    val out = graft.sinks.NdjsonSink.plain(f).create(tmp, true)
     try out.write(render(cp).getBytes(StandardCharsets.UTF_8)) finally out.close()
+    f match {
+      case c: org.apache.hadoop.fs.LocalFileSystem =>
+        Seq(tmp, p).foreach(x => c.getRawFileSystem.delete(c.getChecksumFile(x), false))
+      case _ =>
+    }
     // FileContext.rename(OVERWRITE) is the atomic commit: plain
     // FileSystem.rename refuses an existing destination, and a
     // delete-then-rename pair leaves a crash window with NO checkpoint

@@ -15,9 +15,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * over parquet scans (column pruning + filter pushdown reach the
   * scan as for any declarative plan) and the native kernels come in
   * through the Catalyst function registry with full codegen, not a
-  * UDF boundary. The chemistry functions are genuinely custom SMILES
-  * algorithms and register as Scala UDFs — the same tier they occupy
-  * on the Scala surface.
+  * UDF boundary; the chemistry functions are native expressions too.
   */
 object QueryCommand {
 
@@ -82,13 +80,13 @@ object QueryCommand {
 
   /** The engine function surface reachable from SQL, used by the
     * `query` and `pipeline` commands. [[graft.engine.Functions.registerAll]]
-    * registers the first two kinds below, `GraftTableFunctions` the third:
+    * registers the first kind below, `GraftTableFunctions` the second:
     *  - every native Catalyst kernel (minhash/simhash/shingles/
-    *    dot_product/…) via [[graft.plans.GraftExtensions]] — codegen'd,
-    *    exactly the `spark.sql.extensions` registration a cluster
-    *    deployment would configure;
-    *  - the chemistry algorithms as named Scala UDFs (their Scala tier
-    *    too — custom SMILES parsing has no built-in form);
+    *    dot_product/…, and the chemistry functions as
+    *    [[graft.plans.ChemistryExpr]]) from the one list,
+    *    [[graft.plans.GraftExtensions.builders]] — codegen'd, exactly
+    *    the `spark.sql.extensions` registration a cluster deployment
+    *    would configure — plus the `format_bytes` UDF;
     *  - table-valued probes over persisted artifacts.
     * Pure-composition helpers (quality ratios, BM25 shapes) are plain
     * ANSI SQL already and need no registration.

@@ -8,6 +8,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * Catalyst expressions as SQL functions, so a session started with
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions` exposes
   * them to pure-SQL clients with full codegen (no UDF boundary).
+  * [[GraftExtensions.builders]] is the one list of them, the chemistry
+  * functions included: `is_valid_smiles`, `molecular_weight`,
+  * `normalize_smiles`, `strip_salt`, `log_p`/`smiles_logp`,
+  * `tpsa`/`smiles_tpsa`, `lipinski_ok`, `morgan_fp` and
+  * `structural_keys` (all [[ChemistryExpr]]).
   *
   * This is the registration half of preference tier (b)/(c) from
   * SURVEY.md §2C; no custom optimizer Rule or SparkStrategy is needed
@@ -77,7 +82,8 @@ object GraftExtensions {
       require(args.size == 1, "url_canon(url)"); UrlCanonExpr(args.head) }),
     ("png_block_means", classOf[PngBlockMeanExpr].getName, { args: Seq[Expression] =>
       require(args.size == 2, "png_block_means(payload, grid)")
-      PngBlockMeanExpr(args.head, intLit(args(1), "grid")) }))
+      PngBlockMeanExpr(args.head, intLit(args(1), "grid")) })) ++
+    ChemistryExpr.names.map(n => (n, classOf[ChemistryExpr].getName, ChemistryExpr.builder(n)))
 
   val descriptors: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
     builders.map { case (name, cls, b) =>

@@ -4,7 +4,7 @@ import java.io.{BufferedOutputStream, IOException, OutputStream}
 import java.util.regex.Pattern
 import java.util.zip.GZIPOutputStream
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
@@ -42,6 +42,13 @@ import org.apache.spark.util.SerializableConfiguration
   * successful tasks return are renamed; the staging directory, with
   * any chunk of a failed attempt or of a crashed run, is removed after
   * the renames.
+  *
+  * On Hadoop's local file system the chunks are written and renamed
+  * through its raw file system ([[plain]]), so no `.crc` sidecar is
+  * written next to a batch, as the reference writes plain files. The
+  * stale-batch deletion also removes the sidecar of every batch name,
+  * so a sidecar left by an older run never sits next to a rewritten
+  * batch (a checksummed read would then fail).
   */
 object NdjsonSink {
 
@@ -56,7 +63,7 @@ object NdjsonSink {
     val sc = df.sparkSession.sparkContext
     val target = new Path(s"$outDir/$source")
     val staging = s"$outDir/_staging-$source"
-    val fs = target.getFileSystem(sc.hadoopConfiguration)
+    val fs = plain(target.getFileSystem(sc.hadoopConfiguration))
     val conf = new SerializableConfiguration(sc.hadoopConfiguration)
     val suffix = if (compress) ".jsonl.gz" else ".jsonl"
     val json = df.select(to_json(struct(
@@ -67,10 +74,13 @@ object NdjsonSink {
         writeChunks(ctx, rows, staging, batchSize, compress, conf))
     val paths = chunks.flatMap(_._2)
     if (fs.exists(target)) {
-      val batchName = (Pattern.quote(source) + "-batch-(\\d+)\\.jsonl(\\.gz)?").r
+      val batch = Pattern.quote(source) + "-batch-(\\d+)\\.jsonl(?:\\.gz)?"
+      val batchName = batch.r
+      val sidecarName = ("\\." + batch + "\\.crc").r
       fs.listStatus(target).map(_.getPath).foreach { p =>
         p.getName match {
-          case batchName(n, _) if n.toLong > startBatch => fs.delete(p, false)
+          case batchName(n) if n.toLong > startBatch => fs.delete(p, false)
+          case sidecarName(_) => fs.delete(p, false)
           case _ =>
         }
       }
@@ -81,6 +91,15 @@ object NdjsonSink {
     }
     fs.delete(new Path(staging), true)
     BatchWriteResult(paths.length.toLong, chunks.map(_._1).sum)
+  }
+
+  /** `fs` without the client-side checksum layer of Hadoop's local file
+    * system, which writes a `.<name>.crc` sidecar next to every file it
+    * creates; any other file system as it is.
+    */
+  private[graft] def plain(fs: FileSystem): FileSystem = fs match {
+    case local: LocalFileSystem => local.getRawFileSystem
+    case other => other
   }
 
   /** One task: its partition's JSON lines into staging chunks of at
@@ -99,7 +118,7 @@ object NdjsonSink {
         if (out == null) {
           val path = new Path(
             f"$staging/part-${ctx.partitionId()}%05d-${ctx.attemptNumber()}-$chunks%06d")
-          val raw = path.getFileSystem(conf.value).create(path, true)
+          val raw = plain(path.getFileSystem(conf.value)).create(path, true)
           out = new BufferedOutputStream(
             if (compress) new GZIPOutputStream(raw, 1 << 16) else raw, 1 << 16)
           paths += path.toString

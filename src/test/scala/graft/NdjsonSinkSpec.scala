@@ -254,4 +254,34 @@ class NdjsonSinkSpec extends SparkSpec {
     assert(crashInWave2(dir2, renamed = None, splitBytes = Some(8L)) > crashed)
     assert(rerunExactlyOnce(dir2) === fresh)
   }
+
+  /** Every `.crc` file under `dir`. */
+  private def sidecars(dir: String): Seq[Path] =
+    Files.walk(Paths.get(dir)).iterator().asScala.filter(_.toString.endsWith(".crc")).toSeq
+
+  test("ingest writes no .crc sidecar; a rerun over old sidecars reads back and drops them") {
+    val clean = tmpDir("eo_crc_clean")
+    rerunExactlyOnce(clean)
+    assert(sidecars(s"$clean/out").isEmpty && sidecars(s"$clean/cp").isEmpty)
+
+    // the reverse of resume (d), where the rerun rewrites batch numbers
+    // with other records, with the sidecars a checksummed writer leaves
+    // planted next to every batch and checkpoint file
+    val dir = tmpDir("eo_crc")
+    crashInWave2(dir, renamed = None, splitBytes = Some(8L))
+    val local = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val planted = Files.walk(Paths.get(dir)).iterator().asScala.toSeq.filter { p =>
+      val name = p.getFileName.toString
+      BatchName.matches(name) || name == "zinc.json"
+    }
+    planted.foreach { p =>
+      val bytes = Files.readAllBytes(p)
+      val out = local.create(new org.apache.hadoop.fs.Path(p.toUri), true)
+      try out.write(bytes) finally out.close()
+    }
+    assert(sidecars(dir).size === planted.size && planted.size > 3)
+    rerunExactlyOnce(dir)
+    assert(sidecars(dir).isEmpty, "no sidecar left")
+    assert(spark.read.text(s"$dir/out/zinc").count() === 16, "checksummed reads succeed")
+  }
 }

@@ -123,6 +123,67 @@ class QueryCliSpec extends SparkSpec {
       org.apache.spark.sql.catalyst.FunctionIdentifier("graft_policy_gate")))
   }
 
+  /** Whether any expression of `plan` holds a node matching `f`. */
+  private def holds(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)(
+      f: org.apache.spark.sql.catalyst.expressions.Expression => Boolean): Boolean =
+    plan.exists(_.expressions.exists(_.exists(f)))
+
+  test("every chemistry SQL name analyses to the native expression under each registration") {
+    import graft.plans.{ChemistryExpr, GraftExtensions}
+    val names = ChemistryExpr.names
+    assert(names.size === 11)
+    def check(session: org.apache.spark.sql.SparkSession, how: String): Unit = names.foreach { n =>
+      val plan = session.sql(s"SELECT $n(s) FROM VALUES ('CCO'), (NULL) AS t(s)")
+        .queryExecution.analyzed
+      assert(holds(plan) { case e: ChemistryExpr => e.name == n; case _ => false }, s"$n via $how")
+      assert(!holds(plan)(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ScalaUDF]),
+        s"no ScalaUDF for $n via $how")
+    }
+    val viaQuery = spark.newSession()
+    QueryCommand.registerFunctions(viaQuery)
+    check(viaQuery, "QueryCommand.registerFunctions")
+    val viaAll = spark.newSession()
+    graft.engine.Functions.registerAll(viaAll)
+    check(viaAll, "Functions.registerAll")
+    // what `spark.sql.extensions=graft.plans.GraftExtensions` applies to
+    // a new session, here on the running SparkContext
+    val active = org.apache.spark.sql.SparkSession.getActiveSession
+    val viaExtensions = try org.apache.spark.sql.SparkSession.builder()
+        .withExtensions(new GraftExtensions).create()
+      finally active.foreach(org.apache.spark.sql.SparkSession.setActiveSession)
+    check(viaExtensions, "spark.sql.extensions")
+  }
+
+  test("the curate query evaluates normalize_smiles once per row, in its own Project") {
+    import graft.plans.ChemistryExpr
+    val dir = tmpDir("query_cli_curate")
+    Seq(("a", "CCO"), ("b", "OCC.[Na+]"), ("c", "[13CH3]O"), ("d", "CC("), ("e", null))
+      .toDF("identifier", "smiles").write.mode("overwrite").json(dir)
+    val df = QueryCommand.run(spark,
+      s"""SELECT norm, count(*) AS n_members, min(identifier) AS keeper,
+         |  min(mw) AS mw_min, max(fp_bits) AS fp_max
+         |FROM (
+         |  SELECT identifier, norm, molecular_weight(norm) AS mw, size(morgan_fp(norm)) AS fp_bits
+         |  FROM (
+         |    SELECT identifier,
+         |      CASE WHEN is_valid_smiles(smiles) THEN normalize_smiles(smiles) END AS norm
+         |    FROM json.`$dir`))
+         |GROUP BY norm""".stripMargin)
+    val plan = df.queryExecution.optimizedPlan
+    def isNormalize(e: org.apache.spark.sql.catalyst.expressions.Expression) = e match {
+      case c: ChemistryExpr => c.name == "normalize_smiles"
+      case _ => false
+    }
+    assert(plan.flatMap(_.expressions).flatMap(_.collect { case e if isNormalize(e) => e })
+      .size === 1, "one normalize_smiles per row")
+    assert(!holds(plan) {
+      case c: ChemistryExpr => c.name != "normalize_smiles" && c.child.exists(isNormalize)
+      case _ => false
+    }, "normalize_smiles is not inlined into its consumers")
+    val got = df.collect().map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
+    assert(got === Map(Some("CCO") -> 1L, Some("OCC") -> 1L, Some("[CH3]O") -> 1L, None -> 2L))
+  }
+
   test("Main.main runs on the caller's session and leaves it running") {
     val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.session.timeZone")
     val before = keys.map(k => k -> spark.conf.get(k))
