@@ -1,9 +1,12 @@
 package graft.checkpoint
 
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, StandardCopyOption}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+
+import graft.sinks.NdjsonSink
 
 /** Per-source job checkpoint with the reference's resume contract
   * (S19–S21): `{cursor, batch_index, completed}` persisted as JSON with
@@ -49,38 +52,45 @@ object JobManifest {
       conf: Configuration = new Configuration()): Unit = {
     val p = pathFor(root, source)
     val f = fs(p, conf)
-    f.mkdirs(p.getParent)
     val tmp = new Path(p.getParent, s".${source}.json.tmp")
-    // written without a `.crc` sidecar on the local file system; any
-    // sidecar an older run left for the checkpoint or its temporary
-    // file goes before the commit (the rename would carry the latter
-    // along), so none ever sits next to the new contents
-    val out = graft.sinks.NdjsonSink.plain(f).create(tmp, true)
-    try out.write(render(cp).getBytes(StandardCharsets.UTF_8)) finally out.close()
-    f match {
-      case c: org.apache.hadoop.fs.LocalFileSystem =>
-        Seq(tmp, p).foreach(x => c.getRawFileSystem.delete(c.getChecksumFile(x), false))
-      case _ =>
-    }
-    // FileContext.rename(OVERWRITE) is the atomic commit: plain
-    // FileSystem.rename refuses an existing destination, and a
-    // delete-then-rename pair leaves a crash window with NO checkpoint
-    // at all (failure would degrade to re-ingestion from startCursor).
-    // Object stores (s3a, …) ship no AbstractFileSystem binding, so
-    // FileContext is unavailable there — fall back to delete+rename,
-    // which loses nothing on those stores (their rename is a
-    // copy+delete, not atomic, with or without FileContext). Same
-    // fallback Spark's CheckpointFileManager uses.
-    val qTmp = f.makeQualified(tmp)
-    val qP = f.makeQualified(p)
-    try
-      org.apache.hadoop.fs.FileContext.getFileContext(qP.toUri, conf)
-        .rename(qTmp, qP, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    catch {
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        if (f.exists(qP)) f.delete(qP, false)
-        if (!f.rename(qTmp, qP))
-          throw new java.io.IOException(s"checkpoint commit failed: $qTmp -> $qP")
+    val bytes = render(cp).getBytes(StandardCharsets.UTF_8)
+    NdjsonSink.localFile(f, p) match {
+      case Some(file) =>
+        // plain file calls start no process (Hadoop's local file system
+        // runs `chmod` and `readlink` for a create and a FileContext
+        // rename) and write no `.crc` sidecar; any sidecar an older run
+        // left next to the checkpoint goes before the commit, so none
+        // ever sits next to the new contents. rename(2) is the atomic
+        // replace of the old checkpoint.
+        val tmpFile = file.resolveSibling(tmp.getName)
+        Files.createDirectories(file.getParent)
+        Files.write(tmpFile, bytes)
+        Seq(tmpFile, file).foreach(x => Files.deleteIfExists(x.resolveSibling(s".${x.getFileName}.crc")))
+        Files.move(tmpFile, file, StandardCopyOption.ATOMIC_MOVE)
+      case None =>
+        f.mkdirs(p.getParent)
+        val out = f.create(tmp, true)
+        try out.write(bytes) finally out.close()
+        // FileContext.rename(OVERWRITE) is the atomic commit: plain
+        // FileSystem.rename refuses an existing destination, and a
+        // delete-then-rename pair leaves a crash window with NO checkpoint
+        // at all (failure would degrade to re-ingestion from startCursor).
+        // Object stores (s3a, …) ship no AbstractFileSystem binding, so
+        // FileContext is unavailable there — fall back to delete+rename,
+        // which loses nothing on those stores (their rename is a
+        // copy+delete, not atomic, with or without FileContext). Same
+        // fallback Spark's CheckpointFileManager uses.
+        val qTmp = f.makeQualified(tmp)
+        val qP = f.makeQualified(p)
+        try
+          org.apache.hadoop.fs.FileContext.getFileContext(qP.toUri, conf)
+            .rename(qTmp, qP, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+        catch {
+          case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
+            if (f.exists(qP)) f.delete(qP, false)
+            if (!f.rename(qTmp, qP))
+              throw new java.io.IOException(s"checkpoint commit failed: $qTmp -> $qP")
+        }
     }
   }
 

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.plans.ProvenanceStampExpr.provenance_stamp
+
 /** Lineage / provenance stamping — the reference's declared metadata
   * contract (/root/reference/docs/system-plan.md:32: "Track provenance
   * (source, timestamp, config hash) in metadata store. Include audit
@@ -13,21 +15,22 @@ import org.apache.spark.sql.functions._
   * and a re-ingest under a changed config is distinguishable row-by-row
   * (golden-specced in IngestionSpec).
   *
-  * Stamping is one projection — no UDF, no shuffle — that rides the
-  * ingest scan: `map_concat` of the filtered map and a literal map.
-  * It is not all generated code: `map_filter` is `CodegenFallback`, so
-  * its lambda runs interpreted per row inside the stage. Over the
-  * 78 629 rows of the benchmark's ZINC tranches (seed 7), one thread,
-  * stamping added about 0.22 s to a 0.37 s native read (medians of 9).
-  * Re-stamping is idempotent: prior provenance keys are filtered out
-  * before the concat, so map_concat can never hit a duplicate key.
+  * Stamping is one native expression, `plans.ProvenanceStampExpr`,
+  * that rides the ingest scan inside its generated code: no UDF, no
+  * lambda, no shuffle. It copies the metadata entries that are not
+  * provenance keys, in their order, and appends the three tags, so
+  * re-stamping is idempotent and a prior stamp is replaced wherever it
+  * sits. A NULL map gives the tags alone; a frame without a `metadata`
+  * column gets the literal tag map. The `map_filter`/`map_concat` form
+  * it replaced, whose lambda ran interpreted per row in a separate
+  * projection above the scan's stage, is the differential oracle in
+  * `IngestKernelSpec`.
   */
 object Provenance {
 
   val SourceKey = "_prov_source"
   val ConfigKey = "_prov_config_hash"
   val AtKey = "_prov_ingested_at"
-  private val Keys = Seq(SourceKey, ConfigKey, AtKey)
 
   /** md5 hex of the raw config text — the config identity. Computed
     * over the BYTES the user wrote (not a re-serialization), so any
@@ -44,18 +47,10 @@ object Provenance {
     */
   def stamp(df: DataFrame, source: String, configHash: String,
       ingestedAt: String): DataFrame = {
-    val tags = map(
-      lit(SourceKey), lit(source),
-      lit(ConfigKey), lit(configHash),
-      lit(AtKey), lit(ingestedAt))
+    val tags = Seq(SourceKey -> source, ConfigKey -> configHash, AtKey -> ingestedAt)
     val stamped: Column =
-      if (df.columns.contains("metadata"))
-        map_concat(
-          map_filter(
-            coalesce(col("metadata"), map().cast("map<string,string>")),
-            (k, _) => !k.isin(Keys.map(lit): _*)),
-          tags)
-      else tags
+      if (df.columns.contains("metadata")) provenance_stamp(col("metadata"), tags)
+      else map(tags.flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
     df.withColumn("metadata", stamped)
   }
 }

@@ -68,7 +68,7 @@ case class DelimitedRowExpr(line: Expression, file: Expression, delimiter: Optio
     val cells =
       if (blank) Array.empty[UTF8String]
       else {
-        val text = if (raw.isValid) raw else UTF8String.fromString(raw.toString)
+        val text = Utf8.valid(raw)
         if (sep != null) splitLiteral(text) else splitWhitespace(text)
       }
     val smiles = if (cells.length > smilesColumn) cells(smilesColumn).trim() else null

@@ -20,7 +20,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * scale): a `udf(...)` pays the Catalyst converter boundary — the
   * result Map is built as Scala objects, then deep-converted to
   * catalyst MapData per record. This expression builds the catalyst
-  * map directly.
+  * map directly, parsing the UTF-8 bytes without building a Java
+  * String or running a regex ([[SdfPropsExpr.parse]], shared with the
+  * SDF row kernel `SdfRowExpr`).
   */
 case class SdfPropsExpr(child: Expression) extends UnaryExpression {
 
@@ -34,43 +36,11 @@ case class SdfPropsExpr(child: Expression) extends UnaryExpression {
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
         s"sdf_props needs a string input, got ${child.dataType.simpleString}")
 
-  private val tagRe = "<([^>]*)>".r
-
   /** Per-row kernel; public so generated code can call it. */
   def compute(text: UTF8String): MapData = {
-    val lines = text.toString.split("\n", -1)
-    val out = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    var i = 0
-    while (i < lines.length) {
-      val line = lines(i)
-      if (line.startsWith(">")) {
-        tagRe.findFirstMatchIn(line) match {
-          case Some(m) =>
-            val tag = m.group(1)
-            val value = new StringBuilder
-            i += 1
-            var first = true
-            while (i < lines.length && lines(i).nonEmpty && !lines(i).startsWith(">")
-                && lines(i) != "$$$$") {
-              if (!first) value.append('\n')
-              value.append(lines(i))
-              first = false
-              i += 1
-            }
-            out(tag) = value.result().trim
-          case None => i += 1
-        }
-      } else i += 1
-    }
-    val keys = new Array[Any](out.size)
-    val vals = new Array[Any](out.size)
-    var j = 0
-    out.foreach { case (k, v) =>
-      keys(j) = UTF8String.fromString(k)
-      vals(j) = UTF8String.fromString(v)
-      j += 1
-    }
-    new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(vals))
+    val p = SdfPropsExpr.parse(text)
+    new ArrayBasedMapData(new GenericArrayData(p.tags.slice(0, p.size)),
+      new GenericArrayData(p.values.slice(0, p.size)))
   }
 
   override def nullSafeEval(input: Any): Any =
@@ -86,6 +56,82 @@ case class SdfPropsExpr(child: Expression) extends UnaryExpression {
 }
 
 object SdfPropsExpr {
+
+  /** The property blocks of one record: tag `i` and its value, `i < size`. */
+  final class Props(val tags: Array[Any], val values: Array[Any], val size: Int)
+
+  /** The `> <TAG>` blocks of `text` in first-seen order, parsed on the
+    * UTF-8 bytes with the semantics of `SdfReader.parseProps`: a record
+    * that is not valid UTF-8 is first decoded the way Java decodes it
+    * (malformed bytes become U+FFFD); lines end at `\n` only; a line
+    * starting with `>` is a tag line when a `<` with a later `>` follows
+    * (the regex `<([^>]*)>`: the tag runs from the first `<` to the next
+    * `>`), else it is skipped; the value is the lines after it up to an
+    * empty line, a `>` line or `$$$$`, joined with `\n` (the bytes in
+    * between, as they stand) and trimmed of every byte up to 0x20, as
+    * `String.trim` trims; a later duplicate tag overwrites the value in
+    * its first position.
+    */
+  def parse(text0: UTF8String): Props = {
+    val text = Utf8.valid(text0)
+    val n = text.numBytes
+    var tags = new Array[Any](8)
+    var values = new Array[Any](8)
+    var size = 0
+    def lineEnd(from: Int): Int = {
+      var i = from
+      while (i < n && text.getByte(i) != '\n') i += 1
+      i
+    }
+    def indexOf(b: Byte, from: Int, until: Int): Int = {
+      var i = from
+      while (i < until && text.getByte(i) != b) i += 1
+      if (i < until) i else -1
+    }
+    def isValueLine(a: Int, b: Int): Boolean =
+      b > a && text.getByte(a) != '>' && !(b - a == 4 && (a until b).forall(text.getByte(_) == '$'))
+    var start = 0
+    while (start <= n) {
+      val end = lineEnd(start)
+      val lt = if (end > start && text.getByte(start) == '>') indexOf('<', start, end) else -1
+      val gt = if (lt < 0) -1 else indexOf('>', lt + 1, end)
+      if (gt < 0) start = end + 1 // not a tag line, or a malformed one (sdf.py:34-37)
+      else {
+        val tag = slice(text, lt + 1, gt)
+        var from = end + 1
+        var until = from
+        var s = end + 1
+        var e = if (s <= n) lineEnd(s) else s
+        while (s <= n && isValueLine(s, e)) {
+          until = e
+          s = e + 1
+          e = if (s <= n) lineEnd(s) else s
+        }
+        while (from < until && (text.getByte(from) & 0xff) <= 0x20) from += 1
+        while (until > from && (text.getByte(until - 1) & 0xff) <= 0x20) until -= 1
+        val value = slice(text, from, until)
+        var k = 0
+        while (k < size && tags(k) != tag) k += 1
+        if (k < size) values(k) = value
+        else {
+          if (size == tags.length) {
+            tags = Array.copyOf(tags, size * 2)
+            values = Array.copyOf(values, size * 2)
+          }
+          tags(size) = tag
+          values(size) = value
+          size += 1
+        }
+        start = s // the line that ended the value is read again
+      }
+    }
+    new Props(tags, values, size)
+  }
+
+  /** The bytes [from, until) of `s` as a new string. */
+  private def slice(s: UTF8String, from: Int, until: Int): UTF8String =
+    if (from >= until) UTF8String.EMPTY_UTF8 else s.copyUTF8String(from, until - 1)
+
   /** Column API: native SDF property-block parser. */
   def sdf_props(record: Column): Column =
     GraftColumnBridge.column(SdfPropsExpr(GraftColumnBridge.expression(record)))

@@ -47,15 +47,18 @@ object Report {
     val p = new Path(dir)
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) return DirectorySummary(dir, 0, 0)
-    val it = fs.listFiles(p, true)
+    // listStatus, not listFiles: a located status loads each file's
+    // permissions, which Hadoop's local file system does by starting an
+    // `ls -ld` process per file; only names and lengths are read here
     var n = 0L
     var bytes = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (suffixes.isEmpty || suffixes.exists(f.getPath.getName.endsWith)) {
+    def walk(d: Path): Unit = fs.listStatus(d).foreach { f =>
+      if (f.isDirectory) walk(f.getPath)
+      else if (suffixes.isEmpty || suffixes.exists(f.getPath.getName.endsWith)) {
         n += 1; bytes += f.getLen
       }
     }
+    walk(p)
     DirectorySummary(dir, n, bytes)
   }
 

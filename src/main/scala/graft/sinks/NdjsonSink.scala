@@ -1,10 +1,13 @@
 package graft.sinks
 
 import java.io.{BufferedOutputStream, IOException, OutputStream}
+import java.nio.file.Files
 import java.util.regex.Pattern
 import java.util.zip.GZIPOutputStream
 
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
@@ -20,17 +23,26 @@ import org.apache.spark.util.SerializableConfiguration
   * One pass, one Spark job, no shuffle. Each task streams its partition,
   * in input order, into staging chunks of at most `batchSize` records
   * under `<out>/_staging-<source>/` (outside the source directory, so
-  * reports never count it). Each record is the UTF-8 bytes of
-  * `to_json(struct(<every column>))`, encoded from the internal rows
-  * inside the codegen'd stage; fields keep the frame's column order,
-  * null fields are omitted, and map keys keep their insertion order
-  * (a source's `metadata` is written in the order the reader and
-  * `Provenance` build it). The driver then renames the chunks, in
-  * (partition, chunk) order, to the contiguous batch numbers after
-  * `startBatch`.
+  * reports never count it). When every column is `string` or
+  * `map<string,string>`, as in every frame the ingest CLI and the HTTP
+  * source write, each record is encoded from the frame's internal rows
+  * straight into the chunk's stream by [[JsonLineEncoder]], so the
+  * stamped frame runs as one generated stage and no Jackson generator
+  * or Java String is built per record. Any other schema is written as
+  * the UTF-8 bytes of `to_json(struct(<every column>))`, and the two
+  * give the same bytes where both apply: fields keep the frame's column
+  * order, null fields are omitted (unless
+  * `spark.sql.jsonGenerator.ignoreNullFields` is false, read at write
+  * time), and map keys keep their insertion order (a source's
+  * `metadata` is written in the order the reader and `Provenance` build
+  * it). The driver then renames the chunks, in (partition, chunk)
+  * order, to the contiguous batch numbers after `startBatch`.
   * Like the reference, which fills batches in input order and flushes
   * the partial batch at the end of each file (S18), every input
-  * partition (one per `.gz` file) ends with its own partial batch.
+  * partition ends with its own partial batch. Both file sources read
+  * through Hadoop's text input (`sources.TextInput`), whose partitions
+  * are one per `.gz` file, in listed order, so a wave's batches are the
+  * same whatever the core count.
   *
   * Exactly-once resume: batch files numbered above `startBatch` can
   * only be left over from a crashed attempt of the same wave (the
@@ -41,14 +53,15 @@ import org.apache.spark.util.SerializableConfiguration
   * attempt never collides with the first. Only the chunks the job's
   * successful tasks return are renamed; the staging directory, with
   * any chunk of a failed attempt or of a crashed run, is removed after
-  * the renames.
+  * the renames, and at once when the job fails (then nothing is renamed
+  * or deleted under the source directory).
   *
-  * On Hadoop's local file system the chunks are written and renamed
-  * through its raw file system ([[plain]]), so no `.crc` sidecar is
-  * written next to a batch, as the reference writes plain files. The
-  * stale-batch deletion also removes the sidecar of every batch name,
-  * so a sidecar left by an older run never sits next to a rewritten
-  * batch (a checksummed read would then fail).
+  * On Hadoop's local file system the chunks are created through plain
+  * file calls ([[create]]), so no `.crc` sidecar is written next to a
+  * batch, as the reference writes plain files, and no `chmod` process
+  * is started per file. The stale-batch deletion also removes the
+  * sidecar of every batch name, so a sidecar left by an older run never
+  * sits next to a rewritten batch (a checksummed read would then fail).
   */
 object NdjsonSink {
 
@@ -66,12 +79,21 @@ object NdjsonSink {
     val fs = plain(target.getFileSystem(sc.hadoopConfiguration))
     val conf = new SerializableConfiguration(sc.hadoopConfiguration)
     val suffix = if (compress) ".jsonl.gz" else ".jsonl"
-    val json = df.select(to_json(struct(
+    val encoder = JsonLineEncoder.forSchema(df.schema,
+      df.sparkSession.conf.get("spark.sql.jsonGenerator.ignoreNullFields").toBoolean)
+    val rows = if (encoder.isDefined) df else df.select(to_json(struct(
       df.columns.toSeq.map(c => df.col("`" + c.replace("`", "``") + "`")): _*)))
     // runJob returns the tasks' results in partition order
-    val chunks = sc.runJob(json.queryExecution.toRdd,
-      (ctx: TaskContext, rows: Iterator[InternalRow]) =>
-        writeChunks(ctx, rows, staging, batchSize, compress, conf))
+    val chunks =
+      try sc.runJob(rows.queryExecution.toRdd,
+        (ctx: TaskContext, it: Iterator[InternalRow]) =>
+          writeChunks(ctx, it, encoder, staging, batchSize, compress, conf))
+      catch {
+        case e: Throwable =>
+          try fs.delete(new Path(staging), true)
+          catch { case NonFatal(d) => e.addSuppressed(d) }
+          throw e
+      }
     val paths = chunks.flatMap(_._2)
     if (fs.exists(target)) {
       val batch = Pattern.quote(source) + "-batch-(\\d+)\\.jsonl(?:\\.gz)?"
@@ -84,7 +106,7 @@ object NdjsonSink {
           case _ =>
         }
       }
-    } else if (paths.nonEmpty) fs.mkdirs(target)
+    } else if (paths.nonEmpty) mkdirs(fs, target)
     paths.zipWithIndex.foreach { case (p, i) =>
       val dst = new Path(target, f"$source-batch-${startBatch + i + 1}%06d$suffix")
       if (!fs.rename(new Path(p), dst)) throw new IOException(s"cannot rename $p to $dst")
@@ -92,6 +114,35 @@ object NdjsonSink {
     fs.delete(new Path(staging), true)
     BatchWriteResult(paths.length.toLong, chunks.map(_._1).sum)
   }
+
+  /** `path` on the local disk when `fs` is Hadoop's local file system. */
+  private[graft] def localFile(fs: FileSystem, path: Path): Option[java.nio.file.Path] =
+    plain(fs) match {
+      case raw: RawLocalFileSystem => Some(raw.pathToFile(path).toPath)
+      case _ => None
+    }
+
+  /** Creates `path` and its missing parents for writing. On the local
+    * file system this takes plain file calls: Hadoop's raw local file
+    * system starts a `chmod` process for every file and directory it
+    * creates, while here the new file's mode follows the umask, as the
+    * reference's plain writes do. Elsewhere `fs` without its checksum
+    * layer.
+    */
+  private[graft] def create(fs: FileSystem, path: Path): OutputStream =
+    localFile(fs, path) match {
+      case Some(file) =>
+        Files.createDirectories(file.getParent)
+        Files.newOutputStream(file)
+      case None => plain(fs).create(path, true)
+    }
+
+  /** `path` and its missing parents as directories, as [[create]] makes them. */
+  private[graft] def mkdirs(fs: FileSystem, path: Path): Unit =
+    localFile(fs, path) match {
+      case Some(dir) => Files.createDirectories(dir)
+      case None => fs.mkdirs(path)
+    }
 
   /** `fs` without the client-side checksum layer of Hadoop's local file
     * system, which writes a `.<name>.crc` sidecar next to every file it
@@ -102,11 +153,12 @@ object NdjsonSink {
     case other => other
   }
 
-  /** One task: its partition's JSON lines into staging chunks of at
-    * most `batchSize` records; returns (records, chunk paths in order).
+  /** One task: its partition's rows as JSON lines, by `encoder` or
+    * (when None) as the UTF-8 string of column 0, into staging chunks of
+    * at most `batchSize` records; returns (records, chunk paths in order).
     */
-  private def writeChunks(ctx: TaskContext, rows: Iterator[InternalRow], staging: String,
-      batchSize: Int, compress: Boolean,
+  private def writeChunks(ctx: TaskContext, rows: Iterator[InternalRow],
+      encoder: Option[JsonLineEncoder], staging: String, batchSize: Int, compress: Boolean,
       conf: SerializableConfiguration): (Long, Array[String]) = {
     val paths = Array.newBuilder[String]
     var chunks = 0
@@ -118,14 +170,18 @@ object NdjsonSink {
         if (out == null) {
           val path = new Path(
             f"$staging/part-${ctx.partitionId()}%05d-${ctx.attemptNumber()}-$chunks%06d")
-          val raw = plain(path.getFileSystem(conf.value)).create(path, true)
+          val raw = create(path.getFileSystem(conf.value), path)
           out = new BufferedOutputStream(
             if (compress) new GZIPOutputStream(raw, 1 << 16) else raw, 1 << 16)
           paths += path.toString
           chunks += 1
         }
-        row.getUTF8String(0).writeTo(out)
-        out.write('\n')
+        encoder match {
+          case Some(e) => e.write(row, out)
+          case None =>
+            row.getUTF8String(0).writeTo(out)
+            out.write('\n')
+        }
         records += 1
         inChunk += 1
         if (inChunk == batchSize) {

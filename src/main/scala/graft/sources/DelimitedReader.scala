@@ -1,7 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.plans.DelimitedRowExpr
 
@@ -17,8 +19,10 @@ import graft.plans.DelimitedRowExpr
   * `plans.DelimitedRowExpr`, which splits each line on the literal
   * separator (or on whitespace runs), applies the three drop rules and
   * builds `struct(identifier, smiles, metadata)` directly, NULL for a
-  * dropped row. `.gz` is handled by the codec layer and provenance
-  * (`source_file`) is supplied natively by `input_file_name()`. The
+  * dropped row. The scan is Hadoop's text input ([[TextInput]]), the
+  * one the SDF source uses: one split per `.gz` file, files in listed
+  * order, whatever the core count, and each line's `source_file` is
+  * the file's name as `input_file_name()` spells it (`file:///…`). The
   * plan is scan → kernel → `isnotnull` filter → projection, one
   * codegen'd stage with no shuffle.
   */
@@ -27,11 +31,12 @@ object DelimitedReader {
   def read(spark: SparkSession, paths: String, sourceName: String,
       delimiter: Option[String] = Some("\t"),
       smilesColumn: Int = 0, identifierColumn: Int = 1): DataFrame =
-    // comma-separated path lists accepted, matching the SDF reader's
-    // Hadoop-input behavior (the CLI's resumable waves pass them);
-    // brace-glob patterns pass through unsplit (PathPatterns)
-    spark.read.text(PathPatterns.split(paths): _*)
-      .select(DelimitedRowExpr.delimited_row(col("value"), input_file_name(),
+    GraftColumnBridge.dataFrame(spark,
+      TextInput.scan(spark, paths, None) { (file, lines) =>
+        val name = TextInput.fileName(file)
+        lines.map(t => new GenericInternalRow(Array[Any](TextInput.bytes(t), name)))
+      }, StructType(Seq(StructField("value", StringType), StructField("file", StringType))))
+      .select(DelimitedRowExpr.delimited_row(col("value"), col("file"),
         delimiter, smilesColumn, identifierColumn).as("row"))
       .filter(col("row").isNotNull)
       .select(lit(sourceName).as("source"), col("row.identifier"), col("row.smiles"),

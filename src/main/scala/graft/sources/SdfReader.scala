@@ -1,12 +1,11 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.io.{LongWritable, Text}
-import org.apache.hadoop.mapreduce.lib.input.TextInputFormat
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.model.Schemas
+import graft.plans.{SdfRowExpr, Utf8}
 
 /** SDF (Structure-Data File) source: record splitting on the `$$$$`
   * sentinel plus `> <TAG>` property-block extraction.
@@ -22,22 +21,25 @@ import graft.model.Schemas
   * `textinputformat.record.delimiter` — a reader CONFIG, not a custom
   * FileFormat — so splits parallelize per-file and gzip is handled by
   * the codec layer (one task per .sdf.gz file, the reference's own
-  * granularity). Property parsing is one scalar function per record.
+  * granularity). The records reach Spark as internal rows built from
+  * the read bytes ([[TextInput]]), and one native kernel per record,
+  * `plans.SdfRowExpr`, parses the property blocks and builds
+  * `struct(identifier, smiles, metadata)` inside the scan's generated
+  * code.
   */
 object SdfReader {
 
-  /** Raw records: one row per molecule block, sentinel stripped. */
-  def readRecords(spark: SparkSession, paths: String): DataFrame = {
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    conf.set("textinputformat.record.delimiter", "\n$$$$")
-    import spark.implicits._
-    val rdd = spark.sparkContext
-      .newAPIHadoopFile(paths, classOf[TextInputFormat],
-        classOf[LongWritable], classOf[Text], conf)
-      .filter { case (_, t) => !isBlank(t.getBytes, t.getLength) }
-      .map { case (_, t) => t.toString }
-    rdd.toDF("record")
-  }
+  /** Raw records: one row per molecule block, sentinel stripped,
+    * blank records dropped. A record that is not valid UTF-8 is decoded
+    * as `Text.toString` decodes it (malformed bytes become U+FFFD);
+    * every other record keeps its bytes as read.
+    */
+  def readRecords(spark: SparkSession, paths: String): DataFrame =
+    GraftColumnBridge.dataFrame(spark,
+      TextInput.scan(spark, paths, Some("\n$$$$")) { (_, records) =>
+        records.filter(t => !isBlank(t.getBytes, t.getLength))
+          .map(t => new GenericInternalRow(Array[Any](Utf8.valid(TextInput.bytes(t)))))
+      }, StructType(Seq(StructField("record", StringType))))
 
   /** True when the first `len` UTF-8 bytes hold only `[ \t\n\x0B\f\r]`,
     * the class of Java's regex `\s` (so newline-only tail records are
@@ -108,29 +110,15 @@ object SdfReader {
   }
 
   /** Full SDF scan → canonical molecule records (S1+S2+S14):
-    * identifier/smiles pulled from configured tags, remaining tags
-    * (optionally restricted) minus empties become metadata.
+    * identifier/smiles pulled from configured tags (`""` when absent),
+    * remaining tags (optionally restricted to `metadataTags`) minus
+    * empties become metadata, all in one `SdfRowExpr` call per record.
     */
   def read(spark: SparkSession, paths: String, sourceName: String,
       identifierTag: String, smilesTag: String,
-      metadataTags: Option[Seq[String]] = None): DataFrame = {
-    val props = sdfProps(col("record"))
-    val withProps = readRecords(spark, paths).select(props.as("props"))
-    // id/smiles tags never leak into metadata, even when explicitly
-    // listed in metadata_tags (reference: pubchem.py:228-238)
-    val keep: Column = metadataTags match {
-      case Some(tags) =>
-        map_filter(col("props"), (k, v) =>
-          k.isInCollection(tags) && !k.isin(identifierTag, smilesTag) && v =!= "")
-      case None =>
-        map_filter(col("props"), (k, v) =>
-          !k.isin(identifierTag, smilesTag) && v =!= "")
-    }
-    withProps.select(
-      lit(sourceName).as("source"),
-      trim(coalesce(element_at(col("props"), identifierTag), lit(""))).as("identifier"),
-      trim(coalesce(element_at(col("props"), smilesTag), lit(""))).as("smiles"),
-      keep.as("metadata"))
-      .select(Schemas.molecule.fieldNames.map(col).toSeq: _*)
-  }
+      metadataTags: Option[Seq[String]] = None): DataFrame =
+    readRecords(spark, paths)
+      .select(SdfRowExpr.sdf_row(col("record"), identifierTag, smilesTag, metadataTags).as("row"))
+      .select(lit(sourceName).as("source"), col("row.identifier"), col("row.smiles"),
+        col("row.metadata"))
 }

@@ -91,6 +91,56 @@ class NdjsonSinkSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(s"$dir/out/_staging-zinc")), "no staging left behind")
   }
 
+  test("a gzip wave's batches do not depend on Spark's file-packing settings; batch 1 starts the first file") {
+    val dir = tmpDir("sink_layout")
+    // the last file is the largest, so an order by size would start with it
+    val files = (0 until 4).map { f =>
+      val path = s"$dir/tranche_00$f.txt.gz"
+      writeGz(path, (1 to 30 + 10 * f).map(i => f"C\tT${f}_$i%03d\n").mkString)
+      path
+    }
+    def write(settings: (String, String)*): Map[String, Seq[Byte]] = {
+      val before = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+      settings.foreach { case (k, v) => spark.conf.set(k, v) }
+      val out = tmpDir("sink_layout_out")
+      try NdjsonSink.writeNumberedBatches(
+        DelimitedReader.read(spark, files.mkString(","), "zinc"), out, "zinc", 25)
+      finally before.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      Files.list(Paths.get(s"$out/zinc")).iterator().asScala.toSeq
+        .map(p => p.getFileName.toString -> Files.readAllBytes(p).toSeq).toMap
+    }
+    val packed = write()
+    val split = write("spark.sql.files.maxPartitionBytes" -> "64",
+      "spark.sql.files.openCostInBytes" -> "0")
+    assert(packed.keySet === split.keySet)
+    packed.foreach { case (name, bytes) => assert(bytes === split(name), name) }
+    assert(packed.size === 9, "each file ends with its own partial batch")
+    val batch1 = scala.io.Source.fromInputStream(new java.util.zip.GZIPInputStream(
+      new java.io.ByteArrayInputStream(packed("zinc-batch-000001.jsonl.gz").toArray)), "UTF-8")
+    val ids = try batch1.getLines().map(l => IdField.findFirstMatchIn(l).get.group(1)).toList
+      finally batch1.close()
+    assert(ids === (1 to 25).map(i => f"T0_$i%03d"), "batch 1 holds the first listed file's records")
+  }
+
+  test("a failed write removes its staging directory and renames no batch") {
+    val dir = tmpDir("sink_fail")
+    Files.createDirectories(Paths.get(s"$dir/out/x"))
+    val old = Paths.get(s"$dir/out/x/x-batch-000001.jsonl")
+    Files.writeString(old, "{\"id\":\"old\"}\n")
+    val boom = org.apache.spark.sql.functions.udf((i: Long) =>
+      if (i == 7) throw new IllegalStateException("planted failure") else i.toString)
+    val df = spark.range(0, 20, 1, 1).select(boom(col("id")).as("id"))
+    val e = intercept[org.apache.spark.SparkException](
+      NdjsonSink.writeNumberedBatches(df, s"$dir/out", "x", 2, compress = false))
+    assert(e.getMessage.contains("planted failure"))
+    assert(!Files.exists(Paths.get(s"$dir/out/_staging-x")), "no staging left behind")
+    assert(Files.list(Paths.get(s"$dir/out/x")).iterator().asScala.toSeq === Seq(old))
+    assert(Files.readString(old) === "{\"id\":\"old\"}\n", "no batch renamed")
+  }
+
   // --- encoding: to_json over the internal rows --------------------
 
   private val json = new com.fasterxml.jackson.databind.ObjectMapper
