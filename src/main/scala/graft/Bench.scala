@@ -61,12 +61,13 @@ object Bench {
     // computed — rounds 1–9 used count(), under which Catalyst prunes
     // projection columns feeding no filter/join/aggregate/sort and a
     // pure-projection query (q81's quantize rendering) was timed as
-    // its scan, not its compute (tools/CountProbe: q81 0.14 s counted
-    // vs 1.15 s evaluated at sf0.1). bit_xor is the combiner (a sum of
-    // 64-bit hashes would overflow under ANSI); the hash stays inside
-    // whole-stage codegen, so the added cost over the query itself is
-    // one hash per output row. Map-typed outputs (hash unsupported)
-    // fall back to foreach(_ => ()) — full row materialization.
+    // its scan, not its compute (tools/CountProbe, last in 027a381:
+    // q81 0.14 s counted vs 1.15 s evaluated at sf0.1). bit_xor is the
+    // combiner (a sum of 64-bit hashes would overflow under ANSI); the
+    // hash stays inside whole-stage codegen, so the added cost over
+    // the query itself is one hash per output row. Map-typed outputs
+    // (hash unsupported) fall back to foreach(_ => ()) — full row
+    // materialization.
     // SPARK_GRAFT_BENCH_ACTION=count restores the old metric for
     // same-session control pairs against the r1–r9 yardstick
     // (BASELINE.md records the r10 methodology re-anchor pair).

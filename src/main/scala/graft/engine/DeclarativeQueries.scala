@@ -87,7 +87,7 @@ object DeclarativeQueries {
       (s, d) =>
         val ckpt = java.nio.file.Files.createTempDirectory("graft_pipeline_q110").toString
         val spec = PipelineConfig.parse(RollupYaml)
-        val res = PipelineRunner.run(s, spec,
+        PipelineRunner.run(s, spec,
           vars = Map("DIR" -> d, "CKPT" -> ckpt))
         // read the SINK's output (not the in-memory frame): the checked
         // rows must have passed through the full declared DAG including

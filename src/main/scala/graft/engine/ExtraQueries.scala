@@ -1,6 +1,5 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Coverage for the remaining SURVEY.md §2C rows: collect_list/set,

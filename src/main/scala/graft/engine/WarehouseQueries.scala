@@ -387,23 +387,9 @@ SELECT piece, cnt FROM v$rounds ORDER BY piece"""
       val P = graft.operators.Profiling
       val cents = orders(s, d)
         .select(floor(col("o_totalprice") * 100).cast("long").as("v"))
-      // wave-sketch fusion is conf-gated (r16, default OFF): fused =
-      // one (wave, bin) aggregate pass + lazy checkpoint shared by all
-      // four wave reads; inline = four independent wave scans. The r15
-      // A/B measured inline faster on local[32] (idle-core stage
-      // concurrency beats scan savings; the fusion barrier serializes)
-      // — a cluster profile whose scans are I/O-bound flips the conf.
-      // Output identical either way (spec-pinned + oracle-checked).
-      val fuse = s.conf.getOption("spark.graft.quantile.fuseWaves")
-        .exists(_.toBoolean)
-      val waves =
-        if (fuse) {
-          val perWave = P.histSketchByWave(cents, col("v"),
-            pmod(col("v"), lit(4))).localCheckpoint(false)
-          (0 until 4).map(i =>
-            perWave.filter(col("__w") === i).select("bin", "cnt"))
-        } else (0 until 4).map(i =>
-          P.histSketch(cents.filter(pmod(col("v"), lit(4)) === i), col("v")))
+      // four independent wave scans, folded by adding counts per bin
+      val waves = (0 until 4).map(i =>
+        P.histSketch(cents.filter(pmod(col("v"), lit(4)) === i), col("v")))
       val merged = P.mergeHists(waves)
       val whole = P.histSketch(cents, col("v"))
       val consistent = merged

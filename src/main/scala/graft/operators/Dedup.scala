@@ -409,7 +409,8 @@ object Dedup {
       // the PRE-distinct frame since RemoveRedundantAggregates'
       // duplicate-agnostic whitelist is class-matched and unreachable)
       // and the interleaved A/B measured parity once variant order
-      // alternated (AbProbe's position bias note).
+      // alternated (the position bias note of tools/AbProbe, last in
+      // 027a381).
       .agg(sort_array(graft.plans.BoundedCollectSetAgg
         .bounded_collect_set(col(idCol), maxDf)).as("__ids"))
       .filter(size(col("__ids")).between(2, maxDf))

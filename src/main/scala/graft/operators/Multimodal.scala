@@ -144,7 +144,6 @@ object Multimodal {
     * batching (init once, stream rows) is the part that matters.
     */
   def decodeStub(media: DataFrame, dim: Int = 8): DataFrame = {
-    val spark = media.sparkSession
     val outSchema = StructType(media.schema.fields ++ Seq(
       StructField("features", ArrayType(FloatType), nullable = true)))
     val rows: Dataset[Row] = media.mapPartitions { it =>

@@ -107,23 +107,12 @@ object Profiling {
     df.select(logBin(valueCents).as("bin"))
       .groupBy("bin").agg(count(lit(1)).as("cnt"))
 
-  /** Every wave's [[histSketch]] from ONE aggregate pass: (__w, bin,
-    * cnt) keyed by the wave expression — `filter(__w = i)` of the
-    * result is bit-identical to `histSketch(df.filter(wave = i))`
-    * (spec-pinned). The r15 q142 A/B measured the fusion SLOWER on
-    * local[32] (the four independent wave scans run concurrently on
-    * idle cores, and a materialization barrier serializes them), so
-    * the inline form stays the local default — but on a cluster whose
-    * scans are I/O-bound, one pass over the corpus beats four; the
-    * `spark.graft.quantile.fuseWaves` conf (q142 builder) records
-    * that measured trade instead of losing it.
-    */
-  def histSketchByWave(df: DataFrame, valueCents: Column, wave: Column): DataFrame =
-    df.select(wave.as("__w"), logBin(valueCents).as("bin"))
-      .groupBy("__w", "bin").agg(count(lit(1)).as("cnt"))
-
-  /** Fold wave sketches: counts add per bin. Sketch-store maintenance,
-    * never corpus-sized. */
+  /** Fold wave sketches: counts add per bin, so the fold EQUALS the
+    * sketch of the union. q142 builds each wave's [[histSketch]] from
+    * its own scan and folds the four inline: on local[N] the wave
+    * scans run concurrently on idle cores, which measured faster (r15,
+    * r16) than one fused (wave, bin) pass behind a checkpoint barrier.
+    * Sketch-store maintenance, never corpus-sized. */
   def mergeHists(waves: Seq[DataFrame]): DataFrame = {
     require(waves.nonEmpty, "need at least one wave")
     waves.reduce(_ unionByName _)

@@ -103,9 +103,13 @@ case class DelimitedRowExpr(line: Expression, file: Expression, delimiter: Optio
     i == s.numBytes
   }
 
-  /** The bytes [from, until) as a new string (the input buffer is reused). */
+  /** The bytes [from, until) as a view over `s`'s bytes: the result row
+    * is copied out (projected, or `copy()`'d by a buffering operator)
+    * before the scan reuses the line's buffer.
+    */
   private def cell(s: UTF8String, from: Int, until: Int): UTF8String =
-    if (from == until) UTF8String.EMPTY_UTF8 else s.copyUTF8String(from, until - 1)
+    if (from == until) UTF8String.EMPTY_UTF8
+    else UTF8String.fromAddress(s.getBaseObject, s.getBaseOffset + from, until - from)
 
   private def splitLiteral(s: UTF8String): Array[UTF8String] = {
     val out = Array.newBuilder[UTF8String]

@@ -1,13 +1,10 @@
 package graft.plans
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.types.{DataType, LongType}
-import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native 32-bit SimHash over whitespace tokens: each token's

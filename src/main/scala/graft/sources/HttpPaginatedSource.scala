@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.checkpoint.JobManifest
 import graft.checkpoint.JobManifest.Checkpoint

@@ -9,6 +9,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.model.Schemas
+import graft.plans.DelimitedRowExpr
 import graft.sources.{DelimitedReader, PathPatterns}
 
 /** `DelimitedReader.read` (the native `DelimitedRowExpr` kernel) against
@@ -132,6 +133,24 @@ class DelimitedReaderSpec extends SparkSpec {
     assert(got.find(_._2 == "Z4").get._5.tail === Seq("", "x", ""))
     Seq((1, 0), (2, 0), (1, 1), (0, 0), (3, 1), (2, 4)).foreach { case (s, i) =>
       same(path, Some("\t"), s, i)
+    }
+  }
+
+  test("over spark.read.text, whose lines share a reused row buffer, the kernel matches the HOF oracle") {
+    val path = writeBytes(tmpDir("dr_text"), "z.txt", tabCorpus)
+    Seq("FALLBACK", "NO_CODEGEN").foreach { mode =>
+      withCodegen(mode) {
+        Seq(Some("\t"), None).foreach { d =>
+          val got = spark.read.text(path)
+            .select(DelimitedRowExpr.delimited_row(col("value"), input_file_name(), d, 0, 1)
+              .as("row"))
+            .filter(col("row").isNotNull)
+            .select(lit("zinc").as("source"), col("row.identifier"), col("row.smiles"),
+              col("row.metadata"))
+          val g = rows(got)
+          assert(g.nonEmpty && g === rows(hofRead(spark, path, "zinc", d)), s"delimiter $d, $mode")
+        }
+      }
     }
   }
 
