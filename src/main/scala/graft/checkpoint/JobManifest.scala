@@ -19,8 +19,7 @@ import graft.sinks.NdjsonSink
   * outright; within a source, Spark's commit protocol makes the write
   * all-or-nothing), which upgrades the reference's at-least-once
   * write-batch-then-checkpoint ordering (runner.py:168-177) to
-  * effectively-once. Streaming paths use Structured Streaming's own
-  * offset/commit logs instead (see graft.streaming).
+  * effectively-once.
   */
 object JobManifest {
 

@@ -789,7 +789,7 @@ object CurationQueries {
           |ORDER BY probe, k""".stripMargin, dataDir = Some(d))
     },
 
-    // STREAMING DP RELEASE, batch-replayed (r13 verdict item 7): the
+    // WAVED DP RELEASE (r13 verdict item 7): the
     // corpus arrives as three waves (doc_id mod 3); each wave releases
     // its own dpDataCard at a FRESH per-wave seed (100 + w) and spends
     // 6 units of ε = ln 2 against a budget of 12 — so waves 0 and 1
@@ -797,11 +797,8 @@ object CurationQueries {
     // replays the LEDGER ARITHMETIC itself (the `led` CTE derives the
     // released set from (w+1)·6 ≤ 12 — not a hardcoded wave list) and
     // then each released wave's exact seeded noise, q205's chain per
-    // wave. The streaming twin (`EventStreams.dpReleaseStream`) lands
-    // the same decisions against a persisted wave-layered ledger —
-    // spec-pinned; this entry pins the math both share. Seeds are
-    // public here, so this is a mechanism replay, not a release (the
-    // dpDataCard conditionality note).
+    // wave. Seeds are public here, so this is a mechanism replay, not
+    // a release (the dpDataCard conditionality note).
     sql("q209_dp_release_ledger", {
       def arm(w: Int): String = {
         val seed = 100 + w

@@ -5,11 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Event-stream semantics expressed over the batch `events` table:
   * tumbling-window aggregation, gaps-and-islands sessionization, as-of
-  * (most-recent-prior) joins, and JSON property extraction. The
-  * streaming execution of the same plans (withWatermark + window,
-  * session_window, stream-stream interval join) lives in
-  * `graft.streaming.EventStreams` and its spec; these batch forms are
-  * the DuckDB-verifiable contract for the same semantics.
+  * (most-recent-prior) joins, and JSON property extraction, each
+  * checked against DuckDB.
   *
   * Timestamp note: the parquet column is nanosecond-precision; both
   * Spark and DuckDB truncate to microseconds on read, so raw `ts`
@@ -34,9 +31,8 @@ object EventQueries {
     },
 
     // Gaps-and-islands sessionization: a session breaks after >30 min of
-    // user inactivity. In a streaming context this is session_window(ts,
-    // '30 minutes'); here it is the window-function formulation both
-    // engines agree on.
+    // user inactivity, in the window-function formulation both engines
+    // agree on.
     sql("q31_sessionization",
       """WITH flagged AS (
         | SELECT user_id, event_id, ts, value,

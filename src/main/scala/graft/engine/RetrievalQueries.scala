@@ -1503,8 +1503,7 @@ object RetrievalQueries {
     // sides (disjoint ids ⇒ counts add), so the cross output equals
     // the full recompute over catalog ∪ delta restricted to
     // (catalog, delta) pairs; only delta-present keys can pair, so
-    // probe cost tracks delta size. This is the batch face of
-    // `EventStreams.imageAdmitStream`'s per-wave probe. Grid 6 (the
+    // probe cost tracks delta size. Grid 6 (the
     // wide-signature-space remedy q211 established): at grid 4 the
     // 100× replica corpus drives every delta key past the combined
     // cap and the probe saturates to zero — the q196 failure shape.

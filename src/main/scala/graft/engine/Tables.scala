@@ -28,27 +28,29 @@ object Tables {
   // testdata directories are immutable for a session's lifetime
   // (TESTDATA.md), which is the same assumption Spark's own
   // filesourcePartitionFileCacheSize listing cache makes.
-  // weak session keys (r15 ADVICE): a strong (session, path) key
-  // retains every stopped session's DataFrames and file indexes for
-  // the JVM lifetime — fine for bench/Verify, a leak in a long-lived
-  // multi-session service. The outer map drops a session's whole
-  // per-path map once the session is unreachable; the inner map stays
-  // a plain ConcurrentHashMap (paths are immutable for a session's
-  // lifetime, TESTDATA.md — the same assumption Spark's own file
-  // listing cache makes).
-  private val planCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]())
+  // A session's entries are evicted when its SparkContext stops: every
+  // cached DataFrame holds its session, so a weak session key would
+  // never clear, and a long-lived JVM that builds and stops a session
+  // per call (`graft.cli.Main`) would keep each stopped session alive.
+  private val planCache = new java.util.concurrent.ConcurrentHashMap[
+    SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
+
+  /** Sessions that currently hold cached plans. */
+  private[graft] def cachedSessions: Set[SparkSession] = {
+    import scala.jdk.CollectionConverters._
+    planCache.keySet.asScala.toSet
+  }
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val perSession = planCache.synchronized {
-      var m = planCache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        planCache.put(spark, m)
-      }
-      m
-    }
+    val perSession = planCache.computeIfAbsent(spark, { s =>
+      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onApplicationEnd(
+            end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
+          planCache.remove(s); ()
+        }
+      })
+      new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    })
     perSession.computeIfAbsent(s"$dir/$name.parquet", p => spark.read.parquet(p))
   }
 

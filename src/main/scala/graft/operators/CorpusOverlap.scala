@@ -42,9 +42,7 @@ object CorpusOverlap {
   def kmvHash(key: Column): Column =
     conv(substring(md5(key), 1, 15), 16, 10).cast("long")
 
-  /** Per-corpus mergeable sketch unit: (corpus, n_rows, kmv). The
-    * wave table an incremental pipeline persists — [[mergeKmvSketches]]
-    * folds waves EXACTLY (split-invariance pinned in OperatorsSpec).
+  /** Per-corpus mergeable sketch unit: (corpus, n_rows, kmv).
     * Null keys are dropped here (primitive-long UDAF input reads null
     * as 0 — KmvMinKAgg scaladoc). */
   def kmvSketches(df: DataFrame, corpusCol: String, key: Column,
@@ -53,25 +51,6 @@ object CorpusOverlap {
       .groupBy(col(corpusCol))
       .agg(count(lit(1)).as("n_rows"),
         KmvMinKAgg.kmv_sketch(k)(kmvHash(key)).as("kmv"))
-
-  /** Fold wave sketch tables: counts add, sketches sorted-merge-dedup
-    * to k. Inputs are sketch-store-sized (≤ |corpora|·k longs per
-    * wave), never corpus-sized. */
-  def mergeKmvSketches(corpusCol: String, waves: Seq[DataFrame],
-      k: Int): DataFrame = {
-    require(waves.nonEmpty, "need at least one wave")
-    val all = waves.reduce(_ unionByName _)
-    val counts = all.groupBy(col(corpusCol)).agg(sum("n_rows").as("n_rows"))
-    val merged = all.select(col(corpusCol), explode(col("kmv")).as("h"))
-      .groupBy(col(corpusCol))
-      .agg(KmvMinKAgg.kmv_sketch(k)(col("h")).as("kmv"))
-    // LEFT join + empty-array fill: a corpus whose waves carry only
-    // EMPTY sketches (explode yields no rows for it) must survive the
-    // fold as (corpus, n_rows, []) — an inner join would silently drop
-    // the corpus and its row count
-    counts.join(merged, Seq(corpusCol), "left")
-      .withColumn("kmv", coalesce(col("kmv"), array().cast("array<bigint>")))
-  }
 
   /** Exclusive theta of one sketch: its k-th (largest retained) value,
     * or the 2⁶⁰ sentinel while in exact mode. Long, so membership

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.BinaryType
 /** Bloom-filter benchmark decontamination — the 100 TB formulation of
   * the eval-overlap check (reference commits to QA/dedup stages:
   * /root/reference/docs/system-plan.md:23-27; the exact-join form is
-  * catalog query q68 / `streaming.EventStreams.contaminationFlags`).
+  * catalog query q68).
   *
   * Why a Bloom filter: the exact formulation ships the benchmark
   * shingle SET to every executor (broadcast hash join). A large eval
@@ -72,8 +72,7 @@ object Decontaminate {
 
   /** The distinct non-degenerate token-`shingleSize`-gram set of a
     * corpus as a one-column `shingle` frame — the shared shape of both
-    * decontamination sides (and of the streaming
-    * `EventStreams.benchmarkShingles`, which delegates here).
+    * decontamination sides.
     */
   def shingleSet(df: DataFrame, textCol: String = "text",
       shingleSize: Int = 4): DataFrame =

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
+import graft.plans.Kernels
+import graft.plans.Kernels.P31
 
 /** Deduplication operators for web-scale corpora, in increasing
   * fuzziness: exact (hash groupBy), MinHash+LSH banding, SimHash, and
@@ -20,40 +22,6 @@ import graft.functions.TextFunctions
   */
 object Dedup {
 
-  /** Exact dedup keeping the smallest-id row per identical content,
-    * with NO sort anywhere in the plan: `groupBy(fingerprint)
-    * .agg(min(id))` finds the keeper ids in a pure HashAggregate
-    * (primitive buffer — partial aggregation collapses duplicates
-    * map-side, so only unique fingerprints cross the wire), then a
-    * shuffled-hash LEFT SEMI join keeps the keeper rows. (Two
-    * formulations that LOOK cheaper both sort the corpus:
-    * `row_number().over(Window.partitionBy(fp).orderBy(id))` shuffles
-    * AND per-group-sorts all rows, and `agg(min_by(struct(*), id))` —
-    * one shuffle on paper — plans as SortAggregate because a struct
-    * aggregation buffer is not hash-supported. The `shuffle_hash`
-    * hint on the keeper side matters for the same reason: the default
-    * sort-merge semi-join would re-sort both sides; hashing the
-    * keeper-id build side is strictly cheaper and skew-free, since
-    * ids are unique.)
-    *
-    * PRECONDITION: `idCol` must be unique AND non-null — it is the
-    * keeper key. With duplicate ids the semi-join keeps EVERY row
-    * carrying a keeper id (including content-duplicate rows that share
-    * the keeper's id), where the old windowed form kept one arbitrary
-    * row per content. Null-id rows are EXCLUDED from the output: an
-    * equality semi-join never matches null, and min() ignores nulls,
-    * so a fingerprint group whose ids are all null keeps nothing
-    * (the windowed form kept one arbitrary row). Filter or synthesize
-    * ids (e.g. `monotonically_increasing_id`) before calling.
-    */
-  def exactByContent(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val keepers = df
-      .groupBy(TextFunctions.fingerprint(col(textCol)).as("__fp"))
-      .agg(min(col(idCol)).as("__keep_id"))
-      .select("__keep_id")
-    df.join(keepers.hint("shuffle_hash"), col(idCol) === col("__keep_id"), "left_semi")
-  }
-
   /** Incremental (delta-vs-catalog) exact dedup: keep the `delta` rows
     * whose content digest appears neither in the already-ingested
     * `catalog` nor earlier (by min id) within the delta itself — the
@@ -69,8 +37,8 @@ object Dedup {
     * for self-containment.
     *
     * Scale shape: three digest-keyed hash operations, no sort, no
-    * window — (1) delta self-keepers via the [[exactByContent]]
-    * hash-agg min(id) pattern, (2) a left-semi on the keeper ids
+    * window — (1) delta self-keepers via a hash-agg min(id) per
+    * digest, (2) a left-semi on the keeper ids
     * (delta-sized build, shuffle_hash safe), (3) a left-anti against
     * the catalog digest store, left to AQE: the probe side is
     * delta-sized, so whenever the delta is small relative to the
@@ -153,9 +121,9 @@ object Dedup {
     */
   private def bandKeysOf(df: DataFrame, idCol: String, textCol: String,
       bands: Int, rowsPerBand: Int, shingleSize: Int): DataFrame =
-    // materialized (localCheckpoint): nearDupProbe references the
-    // delta side three times and the catalog side twice, and each
-    // reference would re-run the shingle/MinHash kernel over the
+    // materialized (localCheckpoint): incrementalNearDupCandidates
+    // references the delta side three times and the catalog side twice,
+    // and each reference would re-run the shingle/MinHash kernel over the
     // corpus (guide §3.3); the frame is the (band_key, id) proxy —
     // two longs per banded row — never the text
     df.select(col(idCol).as("id"), posexplode(
@@ -172,9 +140,9 @@ object Dedup {
     * ingest probes `(band_key, id)` with no exchange and no re-band
     * of the catalog (text never rescanned). Buckets are NOT capped at
     * write time: the hot-bucket guard applies at probe time on the
-    * COMBINED (store + delta) bucket size, which is what keeps
-    * [[incrementalNearDupCandidatesVsStore]] bit-equal to a full
-    * recompute ([[minHashCandidates]]) over catalog ∪ delta. A
+    * COMBINED (store + delta) bucket size, which is what keeps a
+    * store probe bit-equal to a full recompute ([[minHashCandidates]])
+    * over catalog ∪ delta. A
     * deployment that must bound store growth under adversarial
     * boilerplate can cap here too, trading that strict equality.
     */
@@ -231,61 +199,34 @@ object Dedup {
     * the cap decision matches the full recompute's. Requires ids
     * disjoint across catalog and delta (any sane ingest key).
     *
-    * Scale shape: the catalog side arrives as a banded projection —
-    * from the persisted store in the production form
-    * ([[incrementalNearDupCandidatesVsStore]]), where its hash agg
-    * and both probe joins run WITHOUT exchanging or sorting the
-    * store (bucketed on band_key; plan-pinned in BandStoreSpec) —
-    * so each ingest shuffles only the delta's band keys: the q98
-    * digest-store property, extended to near-dup.
+    * Scale shape: each side is banded once, then aggregated per
+    * band_key; the delta side is the build side of the probe join.
     */
   def incrementalNearDupCandidates(catalog: DataFrame, delta: DataFrame,
       idCol: String, textCol: String, bands: Int = 8, rowsPerBand: Int = 8,
-      shingleSize: Int = 3, maxBucketSize: Int = 64): DataFrame =
-    nearDupProbe(
-      bandKeysOf(catalog, idCol, textCol, bands, rowsPerBand, shingleSize),
-      bandKeysOf(delta, idCol, textCol, bands, rowsPerBand, shingleSize),
-      maxBucketSize)
-
-  /** [[incrementalNearDupCandidates]] against a persisted
-    * [[writeBandStore]] table: identical output, catalog never
-    * re-banded, store never exchanged. */
-  def incrementalNearDupCandidatesVsStore(
-      spark: org.apache.spark.sql.SparkSession, storeTable: String,
-      delta: DataFrame, idCol: String, textCol: String, bands: Int = 8,
-      rowsPerBand: Int = 8, shingleSize: Int = 3,
-      maxBucketSize: Int = 64): DataFrame =
-    nearDupProbe(spark.table(storeTable),
-      bandKeysOf(delta, idCol, textCol, bands, rowsPerBand, shingleSize),
-      maxBucketSize)
-
-  private def nearDupProbe(catBanded: DataFrame, deltaBanded: DataFrame,
-      maxBucketSize: Int): DataFrame = {
+      shingleSize: Int = 3, maxBucketSize: Int = 64): DataFrame = {
     // grouped member-SET probe (r15, the winnow-admission shape): one
-    // collect_set per side per band_key — the store-side aggregate
-    // runs WITHOUT an exchange (grouping key = bucketing key), only
-    // the delta shuffles. The delta side is the BUILD side of a
-    // shuffled-hash left-outer join (delta-sized build; an SMJ would
-    // re-sort the store-side aggregate per ingest, the plan-spec'd
-    // q98 scale killer), the combined cap gates on the summed set
-    // sizes exactly like the old __dn + __sn counts, and each ≤ cap
+    // collect_set per side per band_key. The delta side is the BUILD
+    // side of a shuffled-hash left-outer join (delta-sized build), the
+    // combined cap gates on the summed set sizes, and each ≤ cap
     // union-set expands its sorted pairs group-locally, kept when at
-    // least one member is a delta doc — the old cross ∪ self legs
-    // (ids are disjoint across sides by precondition, so the
-    // normalized pair spaces never overlapped there either).
+    // least one member is a delta doc (ids are disjoint across sides
+    // by precondition, so the normalized pair spaces never overlap).
     // hot-key guard (r16): per-side bounded collectors at the combined
     // cap. A delta bucket alone over the cap can never pass the summed
-    // gate (the store side contributes ≥ 0), so its NULL drops
-    // pre-join; a store bucket over the cap must drop the JOINED row —
-    // not fall back to "no store entry" — so overflow rides through
+    // gate (the catalog side contributes ≥ 0), so its NULL drops
+    // pre-join; a catalog bucket over the cap must drop the JOINED row —
+    // not fall back to "no catalog entry" — so overflow rides through
     // the left-outer join as (marker present, set NULL) and is
-    // filtered there. Output identical; no buffer ever holds more
-    // than cap+1 members (guide §2.5/§5).
-    val catG = catBanded.groupBy("band_key")
+    // filtered there. No buffer ever holds more than cap+1 members
+    // (guide §2.5/§5).
+    val catG = bandKeysOf(catalog, idCol, textCol, bands, rowsPerBand, shingleSize)
+      .groupBy("band_key")
       .agg(graft.plans.BoundedCollectSetAgg
         .bounded_collect_set_null(col("id"), maxBucketSize).as("__cs"))
       .withColumn("__chit", lit(true))
-    val dltG = deltaBanded.groupBy("band_key")
+    val dltG = bandKeysOf(delta, idCol, textCol, bands, rowsPerBand, shingleSize)
+      .groupBy("band_key")
       .agg(graft.plans.BoundedCollectSetAgg
         .bounded_collect_set_null(col("id"), maxBucketSize).as("__ds"))
       .filter(col("__ds").isNotNull)
@@ -308,11 +249,10 @@ object Dedup {
   /** Exact dedup with a KEEPER POLICY: among content duplicates, keep
     * the row with the smallest (priority, id) — "prefer the curated
     * source over the crawl" when the same text arrives from several
-    * sources, the standard multi-source curation rule (plain
-    * [[exactByContent]] is the priority-blind special case).
+    * sources, the standard multi-source curation rule.
     *
-    * Scale shape: identical to [[exactByContent]] — one HASH aggregate
-    * + a left-semi on the keeper ids; no sort, no window
+    * Scale shape: one HASH aggregate + a left-semi on the keeper ids;
+    * no sort, no window
     * (plan-asserted). The (priority, id) order is packed into ONE long
     * (priority·2⁴⁰ + id) because `min` over a STRUCT is not
     * hash-aggregable — Spark plans SortAggregate with a partition-
@@ -432,12 +372,6 @@ object Dedup {
         i => concat_ws(" ", slice(toks, i, lit(n)))))
   }
 
-  /** Mersenne prime 2^31−1: keeps every intermediate product below
-    * 2^63 under Spark's ANSI overflow checking (a ≤ 127, h < 2^31 →
-    * a·h + b < 2^40).
-    */
-  private val P31 = 2147483647L
-
   /** Shingle hash array: each shingle's xxhash64 reduced mod 2^31−1,
     * materialized ONCE per row. Keep this in its own projection: the
     * shingle builder sits under a `when()` (empty-doc guard), which
@@ -469,9 +403,9 @@ object Dedup {
     * each shingle allocates an intermediate array per fold step.
     */
   def signatureFromHashesHof(hashes: Column, numHashes: Int): Column = {
+    val b = Kernels.minhashBConsts(numHashes)
     val ab = array((0 until numHashes).map { k =>
-      struct(lit(2L * k + 1).as("a"),
-        lit(((k.toLong * 2654435761L) + 1) % P31).as("b"))
+      struct(lit(2L * k + 1).as("a"), lit(b(k)).as("b"))
     }: _*)
     val init = array(Seq.fill(numHashes)(lit(P31)): _*)
     aggregate(hashes, init, (acc, h) =>

@@ -1022,11 +1022,10 @@ object Multimodal {
   /** The cross-format image SIGNATURE frame — one row per decodable
     * image: `(id, __key, __f, __t)` with the coalesced png/jpeg
     * block-mean profile, its total, and the sign-bucket key. Shared
-    * by [[imagePerceptualCandidates]] (batch self-join) and the
-    * streaming admission ([[imageCrossPairs]] over a wave-layered
-    * signature store): both sides derive candidates from the SAME
-    * feature definition, so batch and streaming image dedup stay one
-    * pipeline (the winnow-store convention).
+    * by [[imagePerceptualCandidates]] (self-join) and the incremental
+    * [[imageCrossPairs]] (catalog×delta): both derive candidates from
+    * the SAME feature definition, so full and incremental image dedup
+    * stay one pipeline (the winnow-store convention).
     */
   def imageSignatures(media: DataFrame, grid: Int = 4,
       bt601: Boolean = false): DataFrame =
@@ -1078,132 +1077,6 @@ object Multimodal {
       .filter(col("l1") * 1000 <=
         lit(thrPermille.toLong) * col("t1") * col("t2"))
       .select("id1", "id2", "l1")
-  }
-
-  /** Catalog×delta PLUS WITHIN-DELTA image pairs — the admission
-    * stream's probe (r14 verdict item 4): [[imageCrossPairs]] alone
-    * misses two twins arriving in the SAME micro-batch (wave-N
-    * signatures never probe each other), so the admission probe adds
-    * the batch-internal self-pairs under the SAME combined hot-bucket
-    * cap (store + delta population per key — one `keep` set for both
-    * legs, so the cap can never disagree between them). The output is
-    * exactly the NEW pairs of a full [[imagePerceptualCandidates]]
-    * recompute over catalog ∪ delta — every surviving pair with at
-    * least one delta member — so a batch-sequential stream replay
-    * accumulates the complete recompute pair set (catalog-internal
-    * pairs were earlier waves' output). An empty catalog frame is
-    * valid: at wave 0 the delta self-pairs are the whole output.
-    *
-    * Pairs are ORDER-NORMALIZED (id1 < id2) so accumulated stream
-    * output is tuple-identical to the recompute regardless of which
-    * side an id arrived on, and ONE row per unordered pair survives
-    * even when a RE-DELIVERED id sits in both catalog and delta
-    * (where it would otherwise pair itself and emit through both
-    * legs) — the within-delta leg's row wins DETERMINISTICALLY (a
-    * re-delivered payload's FRESH signature, not the stored one;
-    * arbitrary-row dedup would make l1, and near-threshold pair
-    * emission, differ between a batch and its crash replay). The L1
-    * gate is symmetric in (f, t), so normalization never changes a
-    * verdict. Two deliberate conservatisms under re-delivery,
-    * mirrored by the stream specs: the hot-bucket cap counts a
-    * re-delivered id on BOTH sides (a boundary bucket the recompute
-    * would keep can drop), so "exactly the recompute's new pairs"
-    * holds when catalog and delta ids are disjoint — the normal
-    * admission case — and degrades conservatively otherwise.
-    */
-  def imageAdmissionPairs(catalogSigs: DataFrame, deltaSigs: DataFrame,
-      maxBucketSize: Int = 64, thrPermille: Int = 10): DataFrame = {
-    val cat = catalogSigs.select(col("id"), col("__key"), col("__f"), col("__t"))
-    val dlt = deltaSigs.select(col("id"), col("__key"), col("__f"), col("__t"))
-    val dCnt = dlt.groupBy("__key").agg(count(lit(1)).as("__dn"))
-    val cCnt = cat.groupBy("__key").agg(count(lit(1)).as("__cn"))
-    val keep = dCnt.join(cCnt, Seq("__key"), "left")
-      .filter(col("__dn") + coalesce(col("__cn"), lit(0L)) <= maxBucketSize)
-      .select("__key")
-    val cross = cat.select(col("__key"), col("id").as("ua"),
-        col("__f").as("fa"), col("__t").as("ta"))
-      .join(keep, "__key")
-      .join(dlt.select(col("__key"), col("id").as("ub"),
-        col("__f").as("fb"), col("__t").as("tb")), "__key")
-      .select("ua", "ub", "fa", "fb", "ta", "tb")
-    val keptDlt = dlt.join(keep, "__key")
-    val within = keptDlt.alias("a").join(keptDlt.alias("b"),
-        col("a.__key") === col("b.__key") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("ua"), col("b.id").as("ub"),
-        col("a.__f").as("fa"), col("b.__f").as("fb"),
-        col("a.__t").as("ta"), col("b.__t").as("tb"))
-    val flip = col("ua") > col("ub")
-    cross.withColumn("__pri", lit(1))
-      .unionByName(within.withColumn("__pri", lit(0)))
-      .filter(col("ua") =!= col("ub"))
-      .select(
-        least(col("ua"), col("ub")).as("id1"),
-        greatest(col("ua"), col("ub")).as("id2"),
-        struct(col("__pri"),
-          when(flip, col("tb")).otherwise(col("ta")).as("t1"),
-          when(flip, col("ta")).otherwise(col("tb")).as("t2"),
-          when(flip, col("fb")).otherwise(col("fa")).as("f1"),
-          when(flip, col("fa")).otherwise(col("fb")).as("f2")).as("__s"))
-      // deterministic dedup: lexicographic min prefers the within leg
-      // (fresh delta signatures) and totally orders any remainder
-      .groupBy("id1", "id2").agg(min(col("__s")).as("__s"))
-      .select(col("id1"), col("id2"), col("__s.f1").as("f1"),
-        col("__s.f2").as("f2"), col("__s.t1").as("t1"), col("__s.t2").as("t2"))
-      .withColumn("l1", expr(
-        "aggregate(zip_with(f1, f2, (x, y) -> abs(x * t2 - y * t1)), 0L, (acc, v) -> acc + v)"))
-      .filter(col("l1") * 1000 <=
-        lit(thrPermille.toLong) * col("t1") * col("t2"))
-      .select("id1", "id2", "l1")
-  }
-
-  /** Re-sign a visual signature store at a new grid (and/or luma
-    * model) — the remedy the fixed-grid-for-store-lifetime law calls
-    * for (r14 verdict item 5): signatures at different grids never
-    * share keys, so when a long-running admission stream's catalog
-    * approaches its grid's capacity ([[autoGrid]]'s ~10M-image law for
-    * grid 4), the catalog must be RE-SIGNED into a new wider-grid
-    * store, not re-keyed in place. This operator reads the old
-    * store's (id, wave) membership, re-decodes exactly those ids from
-    * the media table at (`newGrid`, `bt601`), and writes the new
-    * store with the SAME wave structure in ONE pass (one decode of
-    * the member payloads, one bucketed partitioned write — never a
-    * per-wave rescan), so a stream that resumes against the new table
-    * behaves exactly as if it had run at `newGrid` from wave 0:
-    * as-of probes, idempotent wave replaces, and rollbacks all keep
-    * their meaning, and the new store is row-identical to a fresh
-    * build at `newGrid` over the same admission history (spec-pinned
-    * in the [[graft.operators.Stores.compactWaves]] verification
-    * style).
-    *
-    * Members whose payload is absent from `media` or no longer
-    * decodable at the new settings drop out of the new store — the
-    * re-crawl caveat: the media table must still cover the catalog
-    * (it does by construction when admission stores ids from the same
-    * table it signs).
-    */
-  def migrateImageSignatureStore(spark: org.apache.spark.sql.SparkSession,
-      media: DataFrame, oldTable: String, newTable: String, newGrid: Int,
-      buckets: Int = 64, bt601: Boolean = false): Unit = {
-    require(oldTable != newTable,
-      "the migration writes a NEW store (old keys never mix with new)")
-    val membership = spark.table(oldTable).select("id", "wave").distinct()
-    // member-filter BEFORE signing: the decode kernel sits in a
-    // projection below any join, so signing first would decode the
-    // ENTIRE media corpus and discard non-members afterwards — at
-    // 100 TB that is terabytes of pixel work for rows the store never
-    // held. The semi-join ships only ids.
-    val memberMedia = media.join(
-      membership.select(col("id").as("media_id")).distinct(),
-      Seq("media_id"), "left_semi")
-    val resigned = imageSignatures(memberMedia, newGrid, bt601)
-      .join(membership, "id")
-    resigned
-      .repartition(buckets, col("__key"))
-      .write.mode("overwrite")
-      .partitionBy("wave")
-      .bucketBy(buckets, "__key").sortBy("__key")
-      .saveAsTable(newTable)
-    ()
   }
 
   /** MEDIA DATA CARD — the media-corpus member of the data-card family

@@ -458,19 +458,6 @@ object Pq {
       .limit(k)
   }
 
-  /** Maintenance append: encode an accepted delta with the FROZEN
-    * codebooks and add it to the persisted inverted-file layout — the
-    * band/digest-store treatment applied to the ANN index (no
-    * retrain, no touch of existing cells' files; dynamic partition
-    * overwrite is NOT used, so concurrent cells stay intact). Pair
-    * with [[ivfPqDriftStats]] to decide when frozen codebooks have
-    * drifted enough to retrain.
-    */
-  def appendIvfPqIndex(delta: DataFrame, idx: IvfPqIndex, path: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    encodeIvfPq(delta, idx, idCol, vecCol)
-      .write.mode("append").partitionBy("cell").parquet(path)
-
   /** Quantization-drift monitor: per coarse cell, member counts and
     * truncating-mean ADC reconstruction error (Σ_b min_c ‖r−cent‖²,
     * the `pq_encode_err` kernel) for the TRAINED catalog vs a new
@@ -505,22 +492,6 @@ object Pq {
       .select(col("cell"), col("n_cat"), col("n_delta"),
         when(col("n_cat") > 0L, expr("__ec div n_cat")).as("avg_err_cat"),
         when(col("n_delta") > 0L, expr("__ed div n_delta")).as("avg_err_delta"))
-  }
-
-  /** (cell, ADC reconstruction error) COLUMN pair for monitoring
-    * scans — the stateless per-row form of [[ivfPqDriftStats]] that a
-    * streaming micro-batch can select without a join (the coarse
-    * assignment is evaluated twice, once per column — m=1 encode work,
-    * cheap next to the residual scan it feeds). */
-  def cellAndErr(idx: IvfPqIndex, vec: Column): (Column, Column) = {
-    val dim = idx.coarse.subdim
-    val cell = PqEncodeExpr.pq_encode(vec, idx.coarse.flatE6.toSeq, 1, idx.coarse.ksub)
-      .cast("int")
-    val resid = zip_with(toE6(vec),
-      slice(typedlit(idx.coarse.flatE6.toSeq), cell * lit(dim) + lit(1), lit(dim)),
-      (v, c) => v - c)
-    (cell, graft.plans.PqEncodeErrExpr.pq_encode_err(resid,
-      idx.residual.flatE6.toSeq, idx.residual.m, idx.residual.ksub))
   }
 
   // ---- drift-triggered residual retrain (closes the q132 loop) -------

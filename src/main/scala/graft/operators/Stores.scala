@@ -163,11 +163,10 @@ object Stores {
     stores.map { case (table, name, keys) => auditStore(spark, table, name, keys) }
       .reduce(_ unionByName _).orderBy("store")
 
-  /** Wave-gap audit over a batch_id-landed directory store (the
-    * ivfPqMaintainStream / scd2Stream / sketch-store layout): batch
-    * ids present, the contiguous range they should span, and the
-    * MISSING ids inside it — a gap means a wave's landing was lost
-    * after its offsets committed (the at-least-once window every
+  /** Wave-gap audit over a directory store that lands each wave under
+    * `batch_id=N`: batch ids present, the contiguous range they should
+    * span, and the MISSING ids inside it — a gap means a wave's landing
+    * was lost after its offsets committed (the at-least-once window every
     * idempotent-landing store tolerates but an operator must notice
     * and replay). Directory listing only, no data scan; the missing
     * list is built from CONSECUTIVE-ID gaps (never the full head..last
@@ -204,9 +203,8 @@ object Stores {
 
   // ---- wave-layered stores: as-of read + rollback (r10 verdict 3) ----
   //
-  // The `batch_id=N` landing the streamed IVF-PQ index got
-  // (EventStreams.ivfPqMaintainStream) generalized to the incremental
-  // stores: every wave lands as its own `wave=N` PARTITION of a table
+  // Every wave of an incremental store lands as its own `wave=N`
+  // PARTITION of a table
   // that is ALSO bucketed+sorted on the store key. Partition pruning
   // gives as-of reads (`wave <= N`) and surgical rollback (drop the
   // partition); bucketing keeps the probe side exchange-free exactly

@@ -556,11 +556,6 @@ object TextOps {
       .withColumn("novelty_e4", expr("n_novel * 10000 div n_shingles"))
   }
 
-  /** Gaps-and-islands sessionization over any keyed, timestamped
-    * DataFrame: a new session starts after `gapSeconds` of inactivity.
-    * Returns the input plus a per-key `session_id` (1-based).
-    * Batch twin of `EventStreams.sessionAgg` (session_window).
-    */
   /** C4-style LINE-level corpus dedup (Raffel et al. 2020 §2.2: drop
     * any line occurring ≥ `dfThreshold` times in the corpus) —
     * q121/q122's per-source top-k spans generalized to a corpus-wide
@@ -836,62 +831,6 @@ object TextOps {
       policy: Seq[(String, String, Boolean)],
       defaultAllow: Boolean = true): DataFrame =
     policyAudit(docs, urlCol, policy, defaultAllow).filter(col("__allow"))
-
-  /** ADDITIVE per-(host, digest) domain statistics for one slice of a
-    * corpus — the wave-layerable re-expression of [[domainFilter]]'s
-    * per-host card (the gram-df-store law: counts ADD across waves,
-    * so a streaming pipeline lands one wave per micro-batch and the
-    * cumulative card is a re-aggregation, never a text rescan).
-    * Output: `(__host, dg, n_docs, n_short)` — md5 digests, not text,
-    * on the wire (the digest-store convention); hostless docs are NOT
-    * represented (they are never gated — [[domainFilter]]'s rule).
-    *
-    * Additivity: `n_docs`/`n_short` sum across slices, and per-host
-    * DISTINCT content is `count(DISTINCT dg)` over the union — the
-    * one non-additive card term re-expressed at digest granularity so
-    * it IS reconstructible. Store rows are bounded by distinct
-    * content per host, not doc count.
-    */
-  def domainStatsRows(docs: DataFrame, urlCol: String, textCol: String,
-      shortTokens: Int = 32): DataFrame =
-    domainStatsRowsHosted(
-      docs
-        .withColumn("__host",
-          hostOf(graft.plans.UrlCanonExpr.url_canon(col(urlCol))))
-        .filter(col("__host") =!= ""),
-      textCol, shortTokens)
-
-  /** [[domainStatsRows]] over a frame that ALREADY carries a non-empty
-    * `__host` column — lets a caller that derived the host for its own
-    * gating (the streaming gate) avoid a second canonicalization pass.
-    */
-  def domainStatsRowsHosted(hosted: DataFrame, textCol: String,
-      shortTokens: Int = 32): DataFrame =
-    hosted
-      .select(col("__host"),
-        md5(col(textCol)).as("dg"),
-        size(TextFunctions.tokens(col(textCol))).cast("long").as("__n"))
-      .groupBy("__host", "dg")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("__n") < shortTokens, 1L).otherwise(0L)).as("n_short"))
-
-  /** The hosts whose CUMULATIVE stats pass [[domainFilter]]'s gate —
-    * `stats` is any union of [[domainStatsRows]] slices (e.g. every
-    * wave of a layered store plus the current batch). One host-keyed
-    * aggregate; thresholds identical to the batch gate, so
-    * `domainVerdict(domainStatsRows(docs))` selects exactly the hosts
-    * [[domainFilter]] keeps (differential-spec-pinned).
-    */
-  def domainVerdict(stats: DataFrame, maxDupE6: Long,
-      maxShortPermille: Long): DataFrame =
-    stats.groupBy("__host")
-      .agg(sum(col("n_docs")).as("__docs"),
-        count_distinct(col("dg")).as("__distinct"),
-        sum(col("n_short")).as("__short"))
-      .filter(
-        expr("((__docs - __distinct) * 1000000) div __docs") <= maxDupE6 &&
-        expr("(__short * 1000) div __docs") <= maxShortPermille)
-      .select("__host")
 
   /** INTRA-document repetition strip — the transform behind the
     * Gopher repetition signals (q78 measures dup-chunk fractions;
@@ -1328,10 +1267,9 @@ object TextOps {
   }
 
   /** Catalog×delta PLUS WITHIN-DELTA winnow pairs — the text admission
-    * stream's probe (the [[graft.operators.Multimodal.imageAdmissionPairs]]
-    * decision applied to the winnow tier): [[winnowedCrossPairs]] alone
-    * misses two near-dup documents arriving in the SAME micro-batch, so
-    * the admission probe adds delta-internal pairs (a < b) under the
+    * probe: [[winnowedCrossPairs]] alone misses two near-dup documents
+    * arriving in the SAME delta, so the admission probe adds
+    * delta-internal pairs (a < b) under the
     * SAME combined document-frequency cap — one `keep` digest set for
     * both legs. Output = every pair of the full recompute over
     * catalog ∪ delta with at least one delta member, so batch-sequential
@@ -1360,11 +1298,11 @@ object TextOps {
     // no doc pairs with itself — the old union → distinct contract.
     // The df cap sums the per-side DISTINCT counts (double-counting a
     // re-delivered id), byte-identical to the old __ddf + __cdf gate.
-    // hot-key guard (r16, the nearDupProbe shape): bounded collectors
-    // per side. A delta digest over the cap drops pre-join (the
-    // catalog contributes ≥ 0 to the summed gate); a catalog digest
-    // over the cap must drop the JOINED row — not degrade to "not in
-    // catalog" — so overflow rides through the left join as (marker
+    // hot-key guard (r16, the incrementalNearDupCandidates shape):
+    // bounded collectors per side. A delta digest over the cap drops
+    // pre-join (the catalog contributes ≥ 0 to the summed gate); a
+    // catalog digest over the cap must drop the JOINED row — not
+    // degrade to "not in catalog" — so overflow rides through the left join as (marker
     // present, set NULL) and is filtered there. Output identical; no
     // buffer ever holds more than maxDf+1 members (guide §2.5/§5).
     val catG = catalogFps.select(col("doc_id"), col("dg"))

@@ -62,10 +62,7 @@ object PipelineConfig {
   final case class PipelineSpec(
       name: String,
       checkpointDir: Option[String],
-      stages: Seq[StageSpec]) {
-    def stage(name: String): StageSpec = stages.find(_.name == name).getOrElse(
-      throw new IllegalArgumentException(s"pipeline has no stage '$name'"))
-  }
+      stages: Seq[StageSpec])
 
   val KnownKinds: Set[String] =
     Set("scan", "map", "filter", "reduce", "join", "union", "sink")

@@ -61,8 +61,8 @@ case class BoundedCollectSetAgg(
   // relation for it). Every symmetric call site drops oversized groups
   // with a `size(...) >= 2` gate, which an empty array fails exactly
   // like the old over-cap set did. The LEFT-join probe sites
-  // (nearDupProbe, winnow admission cross-probe) opt into
-  // `overflowNull = true` instead: there an overflowed STORE bucket
+  // (incrementalNearDupCandidates, winnow admission cross-probe) opt
+  // into `overflowNull = true` instead: there an overflowed STORE bucket
   // must drop the joined row, and an empty array would be
   // indistinguishable from "drop the store contribution only".
   override def nullable: Boolean = overflowNull

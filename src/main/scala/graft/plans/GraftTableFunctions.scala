@@ -381,7 +381,7 @@ object GraftTableFunctions {
 
   // the STORE read path: overlap straight from a persisted sketch
   // table ([[graft.operators.CorpusOverlap.kmvSketches]]' (corpus,
-  // n_rows, kmv) shape, e.g. a folded kmvSketchStream store) — at
+  // n_rows, kmv) shape, one row per corpus) — at
   // 100 TB the corpora were reduced to k longs each when they were
   // ingested; the probe never rescans them
   private[plans] def buildKmvOverlapStore(args: Seq[Expression]): LogicalPlan = {
@@ -393,7 +393,7 @@ object GraftTableFunctions {
     require(args.size == 5,
       "graft_kmv_overlap_store(sketchTable, corpusCol, corpusA, corpusB, k)" +
         " — sketchTable carries (corpusCol, n_rows, kmv) FOLDED to one" +
-        " row per corpus (readKmvStore); k must equal the ingest k")
+        " row per corpus; k must equal the ingest k")
     val spark = SparkSession.active
     import org.apache.spark.sql.functions.{col, count, lit}
     val t = strLit(args.head, "sketchTable")
@@ -401,13 +401,13 @@ object GraftTableFunctions {
     val sk = spark.table(t)
     // a sketch store is corpora-sized by construction, so this guard
     // is a trivial job — pointing the probe at an UNFOLDED wave store
-    // (raw kmvSketchStream parquet) would otherwise cross-join one
-    // wrong estimate row per wave-pair with no error
+    // would otherwise cross-join one wrong estimate row per wave-pair
+    // with no error
     val dup = sk.groupBy(col(corpusCol)).agg(count(lit(1)).as("n"))
       .filter(col("n") > 1).limit(1).collect()
     require(dup.isEmpty,
       s"graft_kmv_overlap_store: '$t' has ${dup.headOption.map(_.get(0)).orNull} " +
-        "with multiple sketch rows — fold wave stores first (readKmvStore)")
+        "with multiple sketch rows — fold wave stores first")
     plan(graft.operators.CorpusOverlap.overlapPair(sk, corpusCol,
         strLit(args(2), "corpusA"), strLit(args(3), "corpusB"),
         intLit(args(4), "k"))

@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * semantic change propagates to all of them at once and the
   * differential specs catch it everywhere.
   */
-private[plans] object Kernels {
+private[graft] object Kernels {
 
   /** Whitespace tokens, empty tokens dropped — byte-identical to
     * `filter(split(trim(text), "\\s+"), _ =!= "")` on UTF-8 input.
@@ -34,7 +34,10 @@ private[plans] object Kernels {
     }
   }
 
-  /** Mersenne prime 2^31−1 — the modulus of every MinHash quantity. */
+  /** Mersenne prime 2^31−1 — the modulus of every MinHash quantity. It
+    * keeps every intermediate product of the HOF forms below 2^63 under
+    * Spark's ANSI overflow checking (a ≤ 127, h < 2^31 → a·h + b < 2^40).
+    */
   val P31 = 2147483647L
 
   /** Permutation offsets b_k for the MinHash family. */

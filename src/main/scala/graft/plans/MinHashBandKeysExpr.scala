@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
+import Kernels.P31
+
 /** Native Catalyst expression fusing MinHash signature + LSH banding
   * into one pass over the shingle-hash array: computes the
   * `bands × rowsPerBand` signature minima, then folds each band's
@@ -38,7 +40,6 @@ case class MinHashBandKeysExpr(child: Expression, bands: Int, rowsPerBand: Int)
           s"minhash_band_keys(hashes) needs an array<bigint> input, got ${other.simpleString}")
     }
 
-  private val P31 = 2147483647L
   private def numHashes = bands * rowsPerBand
 
   @transient private lazy val bConsts: Array[Long] = Kernels.minhashBConsts(numHashes)

@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
+import Kernels.P31
+
 /** Native Catalyst expression computing a MinHash signature from a
   * shingle-hash array: sig[k] = min over h of ((2k+1)·h + b_k) mod
   * (2^31−1).
@@ -31,7 +33,6 @@ case class MinHashSignatureExpr(child: Expression, numHashes: Int)
           s"minhash_signature needs an array<bigint> input, got ${other.simpleString}")
     }
 
-  private val P31 = 2147483647L
 
   @transient private lazy val bConsts: Array[Long] = Kernels.minhashBConsts(numHashes)
 

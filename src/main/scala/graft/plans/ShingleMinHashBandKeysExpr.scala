@@ -8,6 +8,8 @@ import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import Kernels.P31
+
 /** Fully-fused MinHash-LSH banding over raw text: tokenize (whitespace
   * runs, empty tokens dropped) → token `shingleSize`-gram shingles
   * (space-joined; a doc shorter than the shingle size yields one
@@ -43,7 +45,6 @@ case class ShingleMinHashBandKeysExpr(child: Expression, bands: Int,
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
         s"minhash_band_keys needs a string input, got ${child.dataType.simpleString}")
 
-  private val P31 = 2147483647L
   private def numHashes = bands * rowsPerBand
 
   @transient private lazy val bConsts: Array[Long] = Kernels.minhashBConsts(numHashes)

@@ -53,8 +53,7 @@ object SimHash32Expr {
 }
 
 /** 64-bit SimHash — the full token-hash width, for code spaces where
-  * 32 bits invite birthday collisions (streaming dedup state over
-  * ~10^5+ docs per watermark horizon: 2^32 gives >50 % collision odds
+  * 32 bits invite birthday collisions (2^32 gives >50 % collision odds
   * at ~77 k distinct docs; 2^64 is negligible below ~10^9). No HOF
   * differential exists at this width — 64-bit bit extraction is not
   * exact in the double arithmetic available to higher-order

@@ -20,9 +20,8 @@ import graft.sources.HttpPaginatedSource.{Cursor, Page}
   *
   * Everything here is driver-side protocol plumbing (pagination is
   * protocol-serial); the resulting `Cursor => Page` plugs into
-  * [[HttpPaginatedSource.run]] (batch, checkpointed) or
-  * `dsv2.PagedStreamRegistry` (streaming), both of which distribute
-  * each page's records cluster-wide immediately.
+  * [[HttpPaginatedSource.run]] (batch, checkpointed), which
+  * distributes each page's records cluster-wide immediately.
   */
 object HttpJsonSource {
 

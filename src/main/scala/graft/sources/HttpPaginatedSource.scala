@@ -23,9 +23,7 @@ import graft.sinks.NdjsonSink
   * Scale note: a paginated HTTP API is inherently a serial cursor walk
   * — the driver loop IS the maximal parallelism the protocol allows.
   * Each page's records are distributed immediately; heavy downstream
-  * transforms run cluster-wide per page. A DataSource V2
-  * MicroBatchStream (cursor-as-offset) is the streaming upgrade; this
-  * batch loop keeps identical semantics and checkpoint format.
+  * transforms run cluster-wide per page.
   */
 object HttpPaginatedSource {
 

@@ -261,4 +261,23 @@ class CorpusOpsSpec extends SparkSpec {
     assert(full((1L, 3L)) == probe((1L, 3L)))
     graft.operators.Stores.dropStoreTable(spark, table)
   }
+
+  test("winnowedAdmissionPairs: a re-delivered id votes once and never pairs itself") {
+    import spark.implicits._
+    // doc 5 sits in the catalog AND is re-delivered in the delta with
+    // the same digests; doc 9 shares exactly 2 digests with it. Without
+    // (pair, digest) dedup the two legs would count 4 shared digests
+    // and pass minShared = 3 for a below-threshold pair.
+    val cat = Seq((5L, "A"), (5L, "B")).toDF("doc_id", "dg")
+    val dlt = Seq((5L, "A"), (5L, "B"), (9L, "A"), (9L, "B"), (9L, "C"))
+      .toDF("doc_id", "dg")
+    val strict = TextOps.winnowedAdmissionPairs(cat, dlt, minShared = 3, maxDf = 8)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(strict.isEmpty,
+      s"2 truly-shared digests must not pass minShared = 3: $strict")
+    val loose = TextOps.winnowedAdmissionPairs(cat, dlt, minShared = 2, maxDf = 8)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(loose == Set((5L, 9L, 2L)),
+      s"one pair, counted once, never (5,5): $loose")
+  }
 }

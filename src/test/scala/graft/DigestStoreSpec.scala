@@ -224,7 +224,7 @@ class DigestStoreSpec extends SparkSpec {
     }
   }
 
-  test("incrementalNearDupCandidatesVsStore matches the inline form AND the full recompute") {
+  test("incrementalNearDupCandidates equals the delta-touching subset of the full recompute") {
     import spark.implicits._
     val all = docs(300)
     val catalog = all.filter(col("doc_id") % 10 < 7)
@@ -235,87 +235,49 @@ class DigestStoreSpec extends SparkSpec {
         (9003L, "en", "twin text here we go again"),
         (9004L, "en", "twin text here we go again"))
         .toDF("doc_id", "lang", "text"))
-    val table = "band_store_diff"
-    dropTable(table)
-    Dedup.writeBandStore(catalog, "doc_id", "text", table,
-      bands = 8, rowsPerBand = 4, buckets = 8)
     val inline = Dedup.incrementalNearDupCandidates(catalog, delta,
         "doc_id", "text", bands = 8, rowsPerBand = 4)
       .orderBy("id1", "id2").collect().toSeq
-    val stored = Dedup.incrementalNearDupCandidatesVsStore(spark, table, delta,
-        "doc_id", "text", bands = 8, rowsPerBand = 4)
-      .orderBy("id1", "id2").collect().toSeq
     assert(inline.nonEmpty, "fixture must plant near-dup pairs")
-    assert(stored === inline)
-    // == the delta-touching subset of the full recompute
     val deltaIds = delta.select("doc_id").as[Long].collect().toSet
     val full = Dedup.minHashCandidates(catalog.unionByName(delta),
         "doc_id", "text", bands = 8, rowsPerBand = 4)
       .filter(col("id1").isin(deltaIds.toSeq: _*) ||
         col("id2").isin(deltaIds.toSeq: _*))
       .orderBy("id1", "id2").collect().toSeq
-    assert(stored === full)
+    assert(inline === full)
     // planted pairs are found
-    val pairs = stored.map(r => (r.getLong(0), r.getLong(1))).toSet
+    val pairs = inline.map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((0L, 9001L)) && pairs.contains((10L, 9002L)) &&
       pairs.contains((9003L, 9004L)))
-
-    // maintenance: append the delta's band keys; re-running the SAME
-    // delta then reports each delta doc's self-pair candidates (its
-    // own keys are now in the store) — spot-check the twin pair
-    // arrives store-side too
-    Dedup.appendToBandStore(delta, "doc_id", "text", table,
-      bands = 8, rowsPerBand = 4, buckets = 8)
-    val rerun = Dedup.incrementalNearDupCandidatesVsStore(spark, table, delta,
-        "doc_id", "text", bands = 8, rowsPerBand = 4)
-    assert(rerun.filter(col("id1") === 9003L && col("id2") === 9004L)
-      .count() >= 1)
-    dropTable(table)
   }
 
-  test("near-dup band-store probe plans with NO exchange and NO sort on the store side") {
-    val all = docs(300)
-    val catalog = all.filter(col("doc_id") % 10 < 7)
-    val delta = all.filter(col("doc_id") % 10 >= 7)
-    val table = "band_store_plan"
-    dropTable(table)
-    Dedup.writeBandStore(catalog, "doc_id", "text", table,
+  test("compactBandStore removes replayed duplicates and keeps the bucketed layout") {
+    val all = docs(30)
+    val table = "neardup_compact_store"
+    dropTable(table); dropTable(s"${table}__compact")
+    Dedup.writeBandStore(all, "doc_id", "text", table,
       bands = 8, rowsPerBand = 4, buckets = 8)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try withBucketOrdering {
-      val df = Dedup.incrementalNearDupCandidatesVsStore(spark, table, delta,
-        "doc_id", "text", bands = 8, rowsPerBand = 4)
-      df.count()
-      val plan = physical(df)
-      // every operator anywhere above the store's file scan — the
-      // count aggregate, the valid-keys join, the probe join — must
-      // reach it without ShuffleExchange: the store is bucketed on
-      // band_key and is NEVER re-partitioned (the q98 scale property)
-      def isStoreScan(p: SparkPlan): Boolean = p match {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-          s.tableIdentifier.exists(_.table == table)
-        case _ => false
-      }
-      assert(plan.collectLeaves().exists(isStoreScan),
-        s"expected store scans in:\n$plan")
-      // an exchange or sort whose ENTIRE subtree is store lineage
-      // would re-shuffle/re-sort catalog-sized data per ingest — the
-      // q98 scale killer. Exchanges fed by any delta lineage are
-      // delta-bounded (every join with the delta shrinks the flow)
-      // and allowed.
-      val bad = plan.collect {
-        case e: ShuffleExchangeLike
-          if e.collectLeaves().forall(isStoreScan) => e.getClass.getSimpleName
-        case s: SortExec
-          if s.collectLeaves().forall(isStoreScan) => s.getClass.getSimpleName
-      }
-      assert(bad.isEmpty,
-        s"pure store lineage must never be exchanged or sorted, found $bad in:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      dropTable(table)
-    }
+    val clean = spark.table(table).collect().toSet
+    // simulate an at-least-once replayed append: same rows twice
+    val extra = all.filter(col("doc_id") < 5)
+    Dedup.appendToBandStore(extra, "doc_id", "text", table,
+      bands = 8, rowsPerBand = 4, buckets = 8)
+    Dedup.appendToBandStore(extra, "doc_id", "text", table,
+      bands = 8, rowsPerBand = 4, buckets = 8)
+    assert(spark.table(table).count() > clean.size)
+
+    Dedup.compactBandStore(spark, table, buckets = 8)
+    val compacted = spark.table(table).collect()
+    assert(compacted.length === clean.size,
+      "distinct rewrite must restore the clean row count")
+    assert(compacted.toSet === clean, "compaction must keep the store's content")
+    // layout preserved: still bucketed on band_key
+    val cat = spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
+    assert(cat.bucketSpec.exists(b =>
+      b.numBuckets === 8 && b.bucketColumnNames === Seq("band_key")))
+    dropTable(table)
   }
 
   test("incremental span-dedup vs gram-df store: equals full recompute, appends add, store exchange-free") {

@@ -195,29 +195,6 @@ class IvfPqSpec extends SparkSpec {
       s"retrained probe must stay partition-pruned:\n$plan")
   }
 
-  test("maintenance append under frozen codebooks: probe equals a from-scratch encode of the union") {
-    val cat = corpus.filter($"vec_id" % 10 =!= 9)
-    val del = corpus.filter($"vec_id" % 10 === 9)
-    val idx = Pq.trainIvfPq(cat, ncells = 4, m = 8, ksub = 16)
-    val qe6 = Pq.queryWeightsE6(query)
-    val path = tmpDir("ivfpq_append")
-    Pq.writeIvfPqIndex(cat, idx, path)
-    Pq.appendIvfPqIndex(del, idx, path)
-    val fromDisk = Pq.ivfPqTopKFromEncoded(
-        spark.read.parquet(path), idx, qe6, k = 20, nprobe = 2)
-      .orderBy("vec_id").collect().toSeq
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    val fresh = Pq.ivfPqTopKFromEncoded(
-        Pq.encodeIvfPq(cat.unionByName(del), idx), idx, qe6, k = 20, nprobe = 2)
-      .orderBy("vec_id").collect().toSeq
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    assert(fromDisk.nonEmpty && fromDisk === fresh)
-    // drift stats cover every cell and count the full split
-    val drift = Pq.ivfPqDriftStats(cat, del, idx).collect()
-    assert(drift.map(_.getLong(1)).sum === cat.count())
-    assert(drift.map(_.getLong(2)).sum === del.count())
-  }
-
   test("2-of-4 probe finds the planted exact neighbor and beats cell-blind chance") {
     // plant an exact copy of the query vector in the corpus: its cell
     // is the query's best cell, so any nprobe >= 1 probe must rank it
@@ -270,137 +247,4 @@ class IvfPqSpec extends SparkSpec {
     assert(scans.head.metadata.getOrElse("PushedFilters", "").contains("label"),
       s"label gate must push into the scan, got ${scans.head.metadata.get("PushedFilters")}")
   }
-
-  test("streaming index maintenance: post-stream index equals batch encode, drift lands per wave, replay idempotent") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val idx = Pq.trainIvfPq(corpus, ncells = 4, m = 8, ksub = 16)
-    val all = corpus.select($"vec_id", $"embedding").limit(60)
-      .as[IvfPqSpec.Vec].collect().toSeq
-    val waves = all.grouped(20).toSeq
-    val dir = tmpDir("ivfpq_stream")
-    val src = MemoryStream[IvfPqSpec.Vec]
-    val q = graft.streaming.EventStreams
-      .ivfPqMaintainStream(src.toDF(), idx, s"$dir/index", s"$dir/drift")
-      .option("checkpointLocation", s"$dir/cp").start()
-    try waves.foreach { w => src.addData(w: _*); q.processAllAvailable() }
-    finally q.stop()
-    // post-stream index ≡ one batch encode of the union
-    val live = graft.streaming.EventStreams
-      .readIvfPqStreamIndex(spark, s"$dir/index")
-      .select("vec_id", "cell", "codes")
-      .as[(Long, Int, Long)].collect().toSet
-    val batch = Pq.encodeIvfPq(waves.flatten.toDF("vec_id", "embedding"), idx)
-      .as[(Long, Int, Long)].collect().toSet
-    assert(live == batch && live.size == 60)
-    // one drift row set per wave, each covering that wave's 20 vectors
-    val drift = graft.streaming.EventStreams.readIvfPqDrift(spark, s"$dir/drift")
-      .as[(Long, Long, Long, Long)].collect().toSeq
-    val perBatch = drift.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
-    assert(perBatch == Map(0L -> 20L, 1L -> 20L, 2L -> 20L), s"per-wave counts: $perBatch")
-    // crash-replay: re-land wave 1 under its own batch_id → nothing changes
-    Pq.encodeIvfPq(waves(1).toDF("vec_id", "embedding"), idx)
-      .write.partitionBy("cell").mode("overwrite")
-      .parquet(s"$dir/index/batch_id=1")
-    val replayed = graft.streaming.EventStreams
-      .readIvfPqStreamIndex(spark, s"$dir/index")
-      .select("vec_id", "cell", "codes")
-      .as[(Long, Int, Long)].collect().toSet
-    assert(replayed == batch)
-    // the accumulated index stays probe-ready (cell pruning intact)
-    val qe6 = Pq.queryWeightsE6(query)
-    val top = Pq.ivfPqTopKFromEncoded(
-      graft.streaming.EventStreams.readIvfPqStreamIndex(spark, s"$dir/index"),
-      idx, qe6, k = 5, nprobe = 2).collect()
-    assert(top.length == 5)
-    // time travel: as-of wave 1 ≡ a batch encode of waves 0–1 only,
-    // and the batch_id <= N predicate partition-prunes the outer layer
-    val asOf = graft.streaming.EventStreams
-      .readIvfPqStreamIndexAsOf(spark, s"$dir/index", maxBatchId = 1L)
-    val asOfSet = asOf.select("vec_id", "cell", "codes")
-      .as[(Long, Int, Long)].collect().toSet
-    val firstTwo = Pq.encodeIvfPq((waves(0) ++ waves(1)).toDF("vec_id", "embedding"), idx)
-      .as[(Long, Int, Long)].collect().toSet
-    assert(asOfSet == firstTwo && asOfSet.size == 40)
-    val asOfPlan = asOf.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    val asOfScan = asOfPlan.collectLeaves()
-      .collect { case s: FileSourceScanExec => s }.head
-    assert(asOfScan.partitionFilters.mkString.contains("batch_id"),
-      s"as-of predicate must partition-prune:\n$asOfPlan")
-  }
-
-  test("streaming drift-triggered retrain rewrites only drifted cells across all waves") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val idx = Pq.trainIvfPq(corpus, ncells = 4, m = 8, ksub = 16)
-    val base = corpus.select($"vec_id", $"embedding")
-      .limit(40).as[IvfPqSpec.Vec].collect().toSeq
-    // waves 0/1: in-distribution copies (new ids); wave 2: +10-shifted
-    // vectors — the planted drift, landing in few cells
-    val w0 = base.take(20).map(v => v.copy(vec_id = v.vec_id + 10000))
-    val w1 = base.drop(20).map(v => v.copy(vec_id = v.vec_id + 10000))
-    val w2 = base.take(20).map(v => IvfPqSpec.Vec(v.vec_id + 20000,
-      v.embedding.map(_ + 10.0f)))
-    val dir = tmpDir("ivfpq_stream_retrain")
-    val src = MemoryStream[IvfPqSpec.Vec]
-    val q = graft.streaming.EventStreams
-      .ivfPqMaintainStream(src.toDF(), idx, s"$dir/index", s"$dir/drift")
-      .option("checkpointLocation", s"$dir/cp").start()
-    try Seq(w0, w1, w2).foreach { w => src.addData(w: _*); q.processAllAvailable() }
-    finally q.stop()
-
-    def cellBytes(batch: Long, c: Int): Map[String, String] = {
-      val d = new java.io.File(s"$dir/index/batch_id=$batch/cell=$c")
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet")).map { f =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          f.getName -> md.digest(java.nio.file.Files.readAllBytes(f.toPath))
-            .map("%02x".format(_)).mkString
-        }.toMap
-    }
-    val before = (for (b <- 0L to 2L; c <- 0 until 4) yield (b, c) -> cellBytes(b, c)).toMap
-
-    val streamed = (w0 ++ w1 ++ w2).toDF("vec_id", "embedding")
-    val rt = graft.streaming.EventStreams.ivfPqStreamRetrain(
-      spark, corpus, streamed, idx, s"$dir/index", s"$dir/drift").get
-    assert(rt.drifted.nonEmpty && rt.drifted.size < 4, s"drifted: ${rt.drifted}")
-
-    // calm cells: byte-identical in EVERY wave; drifted cells: rewritten
-    // wherever they had members
-    for (b <- 0L to 2L; c <- 0 until 4) {
-      if (rt.drifted.contains(c)) {
-        if (before((b, c)).nonEmpty)
-          assert(cellBytes(b, c) != before((b, c)),
-            s"drifted cell $c wave $b must re-encode")
-      } else assert(cellBytes(b, c) == before((b, c)),
-        s"calm cell $c wave $b must stay byte-identical")
-    }
-    // the rewritten index equals a direct v2/v1 re-encode of the
-    // streamed vectors, and stays probe-ready under the versioned probe
-    val live = graft.streaming.EventStreams
-      .readIvfPqStreamIndex(spark, s"$dir/index")
-      .select("vec_id", "cell", "codes").as[(Long, Int, Long)].collect().toSet
-    val expectCalm = Pq.encodeIvfPq(streamed, idx)
-      .filter(!$"cell".isin(rt.drifted.map(Integer.valueOf): _*))
-      .as[(Long, Int, Long)].collect().toSet
-    val expectDrift = Pq.residualsE6(streamed, idx.coarse)
-      .filter($"cell".isin(rt.drifted.map(Integer.valueOf): _*))
-      .select($"vec_id", $"cell",
-        graft.functions.VectorFunctions.pqEncode($"resid",
-          rt.residualV2.flatE6.toSeq, rt.residualV2.m, rt.residualV2.ksub)
-          .as("codes"))
-      .as[(Long, Int, Long)].collect().toSet
-    assert(live == (expectCalm ++ expectDrift) && live.size == 60)
-    val top = Pq.ivfPqTopKRetrained(
-      graft.streaming.EventStreams.readIvfPqStreamIndex(spark, s"$dir/index"),
-      rt, Pq.queryWeightsE6(query), k = 5, nprobe = 2).collect()
-    assert(top.length == 5)
-  }
-}
-
-object IvfPqSpec {
-  final case class Vec(vec_id: Long, embedding: Seq[Float])
 }

@@ -126,80 +126,6 @@ class LayeredStoreSpec extends SparkSpec {
     dropTable(t)
   }
 
-  test("layeredStoreStream lands each micro-batch as an idempotent wave") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val d = docs(45)
-    val waves = (0 to 2).map(i =>
-      digests(d.filter($"doc_id" % 3 === i))
-        .as[Array[Byte]].collect().toSeq.map(LayeredStoreSpec.Dg(_)))
-    val t = "layer_stream"
-    dropTable(t)
-    val src = MemoryStream[LayeredStoreSpec.Dg]
-    val q = graft.streaming.EventStreams
-      .layeredStoreStream(src.toDF(), t, "digest", buckets = 4)
-      .option("checkpointLocation", tmpDir("layer_stream_cp"))
-      .start()
-    try waves.foreach { w => src.addData(w: _*); q.processAllAvailable() }
-    finally q.stop()
-    assert(Stores.storeWaves(spark, t) == Seq(0L, 1L, 2L))
-    // post-stream store == batch construction; as-of prunes history
-    val all = waves.flatten.map(x => x.digest.toSeq).toSet
-    val live = spark.table(t).select("digest")
-      .as[Array[Byte]].collect().map(_.toSeq).toSet
-    assert(live == all)
-    val asOf1 = Stores.asOf(spark, t, 1L).select("digest")
-      .as[Array[Byte]].collect().map(_.toSeq).toSet
-    assert(asOf1 == waves.take(2).flatten.map(_.digest.toSeq).toSet)
-    // crash replay of wave 1 (the foreachBatch re-fire path) replaces,
-    // never duplicates — and the audit reads waves from the layer
-    Stores.appendWave(digests(d.filter($"doc_id" % 3 === 1)), t, 1L, "digest", 4)
-    val a = Stores.auditLayeredStore(spark, t, "digest", Seq("digest"))
-      .as[(String, Long, Long, Long, Long, Long, Boolean)].head()
-    assert(a._6 == 3L && a._4 == 0L, s"3 waves, zero dead rows: $a")
-    dropTable(t)
-  }
-
-  test("layeredStoreStream auto-compaction: depth stays bounded; content, as-of, rollback survive") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val d = docs(160)
-    val waves = (0 to 7).map(i =>
-      digests(d.filter($"doc_id" % 8 === i))
-        .as[Array[Byte]].collect().toSeq.map(LayeredStoreSpec.Dg(_)))
-    val t = "layer_stream_auto"
-    dropTable(t)
-    val src = MemoryStream[LayeredStoreSpec.Dg]
-    val q = graft.streaming.EventStreams
-      .layeredStoreStream(src.toDF(), t, "digest", buckets = 4, maxWaves = 4)
-      .option("checkpointLocation", tmpDir("layer_stream_auto_cp"))
-      .start()
-    try waves.zipWithIndex.foreach { case (w, i) =>
-      src.addData(w: _*); q.processAllAvailable()
-      // the long-running stream never exceeds maxWaves layers
-      assert(Stores.storeWaves(spark, t).size <= 4,
-        s"wave depth must stay bounded at batch $i: ${Stores.storeWaves(spark, t)}")
-    } finally q.stop()
-    // content is exactly the union of every batch across all folds
-    val live = spark.table(t).select("digest")
-      .as[Array[Byte]].collect().map(_.toSeq).toSet
-    assert(live == waves.flatten.map(_.digest.toSeq).toSet)
-    // the newest waves survive as layers: as-of one-before-latest
-    // drops exactly the newest batch (the admission-probe read shape)
-    val ws = Stores.storeWaves(spark, t)
-    assert(ws.last == 7L, s"newest wave must remain its own layer: $ws")
-    val asOfPrev = Stores.asOf(spark, t, 6L).select("digest")
-      .as[Array[Byte]].collect().map(_.toSeq).toSet
-    assert(asOfPrev == waves.take(7).flatten.map(_.digest.toSeq).toSet,
-      "as-of above the fold horizon must be row-identical")
-    // rollback of the newest wave is still surgical after auto-folds
-    Stores.rollbackTo(spark, t, 6L)
-    val rolled = spark.table(t).select("digest")
-      .as[Array[Byte]].collect().map(_.toSeq).toSet
-    assert(rolled == waves.take(7).flatten.map(_.digest.toSeq).toSet)
-    dropTable(t)
-  }
-
   test("compactWaves folds waves <= horizon; as-of >= horizon and rollback survive") {
     val d = docs(100)
     val waves = (0 to 4).map(i => d.filter($"doc_id" % 5 === i))
@@ -322,63 +248,4 @@ class LayeredStoreSpec extends SparkSpec {
     assert(asOf.exceptAll(rebuilt).isEmpty && rebuilt.exceptAll(asOf).isEmpty)
     dropTable(t)
   }
-
-  test("dpReleaseStream: per-wave seeded releases, cumulative ε ledger, hard budget stop, idempotent") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.streaming.EventStreams
-    import graft.operators.Profiling
-    val ledgerT = "dp_release_ledger"
-    dropTable(ledgerT)
-    val relDir = tmpDir("dp_releases")
-    def wave(w: Int): Seq[LayeredStoreSpec.DpDoc] =
-      (0 until 40).map(i => LayeredStoreSpec.DpDoc(w * 100L + i,
-        s"wave $w document body number $i with several words", s"l${i % 3}"))
-    val src = MemoryStream[LayeredStoreSpec.DpDoc]
-    // budget 12 at cost 6 per release: waves 0 and 1 release, 2 and 3
-    // hit the hard stop
-    val q = EventStreams.dpReleaseStream(src.toDF(), ledgerT, relDir,
-        budgetLn2 = 12L, costLn2 = 6L, seedBase = 100L, buckets = 2)
-      .option("checkpointLocation", tmpDir("dp_release_ckpt")).start()
-    try {
-      (0 until 4).foreach { w =>
-        src.addData(wave(w): _*); q.processAllAvailable()
-      }
-    } finally q.stop()
-    // released waves match the batch dpDataCard at the same per-wave
-    // seed — the seeded-replay contract
-    (0 until 2).foreach { w =>
-      val got = spark.read.parquet(s"$relDir/batch_id=$w")
-        .orderBy("scope").collect().map(_.toSeq).toSeq
-      val want = Profiling.dpDataCard(
-          wave(w).toDF().toDF("doc_id", "text", "lang"),
-          "text", "lang", 32, seed = 100L + w)
-        .orderBy("scope").collect().map(_.toSeq).toSeq
-      assert(got == want, s"wave $w release must replay the batch card")
-    }
-    // stopped waves write NO release
-    assert(!new java.io.File(s"$relDir/batch_id=2").exists())
-    assert(!new java.io.File(s"$relDir/batch_id=3").exists())
-    // the ledger records the spends and the stop, wave by wave
-    val ledger = spark.table(ledgerT)
-      .select("wave", "eps_ln2", "released", "seed")
-      .as[(Long, Long, Boolean, Long)].collect().sortBy(_._1).toSeq
-    assert(ledger == Seq((0L, 6L, true, 100L), (1L, 6L, true, 101L),
-      (2L, 0L, false, 102L), (3L, 0L, false, 103L)), s"$ledger")
-    // a crash-replayed ledger wave replaces, never double-charges
-    val before = spark.table(ledgerT).count()
-    graft.operators.Stores.appendWave(
-      Seq(("dp_data_card", 6L, true, 101L))
-        .toDF("entry", "eps_ln2", "released", "seed"),
-      ledgerT, 1L, "entry", buckets = 2)
-    assert(spark.table(ledgerT).count() == before)
-    assert(spark.table(ledgerT).agg(sum($"eps_ln2")).head().getLong(0) == 12L,
-      "cumulative spend stays at the budget after replay")
-    dropTable(ledgerT)
-  }
-}
-
-object LayeredStoreSpec {
-  final case class Dg(digest: Array[Byte])
-  final case class DpDoc(doc_id: Long, text: String, lang: String)
 }

@@ -18,23 +18,27 @@ class OperatorsSpec extends SparkSpec {
     ).toDF("doc_id", "text")
   }
 
+  // exact dedup is exactByContentPriority under one uniform priority:
+  // every tie on (digest, priority) resolves to the smallest id
   test("exact dedup keeps smallest id per content") {
-    val out = Dedup.exactByContent(docs, "doc_id", "text")
+    val in = docs.withColumn("priority", lit(0))
+    val out = Dedup.exactByContentPriority(in, "doc_id", "text", "priority")
     assert(out.count() === 4)
     assert(!out.collect().map(_.getLong(0)).contains(4L))
-    assert(out.columns.toSeq === Seq("doc_id", "text"), "full row schema preserved")
+    assert(out.columns.toSeq === in.columns.toSeq, "full row schema preserved")
     // the kept row is the doc-1 ORIGINAL row, not a synthetic one
     val kept1 = out.filter(col("doc_id") === 1L).collect()(0).getString(1)
     assert(kept1.endsWith("today"))
   }
 
   test("exactByContent aggregates without sorting the corpus") {
-    // the scale contract: one hash shuffle on the fingerprint, partial
-    // agg map-side, and NO Sort operator anywhere — the window
-    // formulation (row_number over partitionBy(fp) orderBy(id)) would
-    // shuffle AND per-group sort all 100 TB
+    // the scale contract: one hash shuffle on the digest, partial agg
+    // map-side, and NO Sort operator anywhere — the window formulation
+    // (row_number over partitionBy(digest) orderBy(id)) would shuffle
+    // AND per-group sort the whole corpus
     val corpus = graft.engine.Tables.documents(spark, "/root/testdata/sf0.001")
-    val out = Dedup.exactByContent(corpus, "doc_id", "text")
+      .withColumn("priority", lit(0))
+    val out = Dedup.exactByContentPriority(corpus, "doc_id", "text", "priority")
     assert(out.count() === 500)
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("Sort"), s"no Sort may appear in:\n$plan")
@@ -1731,6 +1735,28 @@ class OperatorsSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().map(r => (r._1, r._2)).contains((1L, 2L)))
   }
 
+  test("imageCrossPairs: cross-format twins pair catalog×delta, a re-delivered id never pairs itself") {
+    import spark.implicits._
+    def sigs(rows: Seq[(Long, Array[Byte])]) =
+      Multimodal.imageSignatures(rows.toDF("media_id", "payload"), 4)
+    def cross(cat: Seq[(Long, Array[Byte])], dlt: Seq[(Long, Array[Byte])]) =
+      Multimodal.imageCrossPairs(sigs(cat), sigs(dlt))
+        .as[(Long, Long, Long)].collect().toSet
+    // catalog: a JPEG and an unrelated PNG; delta: the JPEG's PNG
+    // re-encode (the cross-format twin) and an unrelated JPEG
+    val cat = Seq((1L, Multimodal.jpegPayload(7L, 1, variant = false)),
+      (2L, Multimodal.pngGrayPayload(8L, 1)))
+    val dlt = Seq((3L, Multimodal.pngGrayPayload(7L, 1)),
+      (4L, Multimodal.jpegPayload(9L, 1, variant = false)))
+    assert(cross(cat, dlt) == Set((1L, 3L, 0L)),
+      "the PNG twin must pair its catalog JPEG across formats")
+    // a re-encoded JPEG twin against the grown catalog pairs both forms
+    val twin = Seq((5L, Multimodal.jpegPayload(7L, 1, variant = true)))
+    assert(cross(cat ++ dlt, twin) == Set((1L, 5L, 0L), (3L, 5L, 0L)))
+    // an id present on both sides never emits the degenerate self-pair
+    assert(cross(cat, cat.take(1) ++ dlt.take(1)) == Set((1L, 3L, 0L)))
+  }
+
   test("BT.601 PNG luma: a COLOR png pairs its JPEG twin at exactly 0; the legacy model cannot") {
     import spark.implicits._
     import graft.operators.Multimodal
@@ -2080,25 +2106,6 @@ class OperatorsSpec extends SparkSpec {
     assert(agg.merge(other, agg.zero).toSeq == other.toSeq)
   }
 
-  test("KMV sketch is EXACTLY split-invariant: merged waves == whole-corpus sketch") {
-    import spark.implicits._
-    import graft.operators.CorpusOverlap
-    // 600 keys across 2 corpora with cross-wave duplicates planted
-    val rows = (0 until 600).map(i => (if (i % 2 == 0) "A" else "B", s"key-${i % 450}"))
-    val df = rows.toDF("corpus", "k")
-    val whole = CorpusOverlap.kmvSketches(df, "corpus", col("k"), k = 32)
-    val waves = (0 until 3).map(w =>
-      CorpusOverlap.kmvSketches(
-        df.filter(abs(hash(col("k"))) % 3 === w), "corpus", col("k"), k = 32))
-    val merged = CorpusOverlap.mergeKmvSketches("corpus", waves, k = 32)
-    val w = whole.orderBy("corpus").as[(String, Long, Seq[Long])].collect().toSeq
-    val m = merged.orderBy("corpus").as[(String, Long, Seq[Long])].collect().toSeq
-    // counts add and the hash arrays are bit-identical — the global k
-    // smallest distinct values are each the k smallest of their own
-    // wave (contrast q133: HLL merge is NOT estimate-invariant)
-    assert(w == m, s"merge(waves) must equal sketch(whole): $w vs $m")
-  }
-
   test("KMV exact mode: below k the estimate IS the exact distinct count") {
     import spark.implicits._
     import graft.operators.CorpusOverlap
@@ -2116,13 +2123,6 @@ class OperatorsSpec extends SparkSpec {
     val got = CorpusOverlap.overlapColumns(ab, col("akmv"), col("bkmv"), 128)
       .select("est_inter", "est_union", "est_b_new").as[(Long, Long, Long)].head()
     assert(got == ((12L, 48L, 18L)), s"exact-mode set algebra: $got")
-    // fold survival of an all-empty-sketch corpus (review find: the
-    // inner join dropped it): a hand-written wave row with kmv = []
-    val wave = Seq(("C", 5L, Seq.empty[Long])).toDF("corpus", "n_rows", "kmv")
-    val folded = CorpusOverlap.mergeKmvSketches("corpus", Seq(wave), 8)
-      .as[(String, Long, Seq[Long])].collect().toSeq
-    assert(folded == Seq(("C", 5L, Seq.empty[Long])),
-      s"empty-sketch corpus must survive the fold: $folded")
   }
 
   test("GIF kernel: cross-format triangle at 0, interlace-invariant, foreign formats null") {

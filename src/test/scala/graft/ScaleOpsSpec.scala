@@ -3,11 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Salting
-import graft.report.Metrics
 
-/** Scale levers: salting preserves semantics; observe() metrics ride
-  * inside the job.
-  */
+/** Scale levers: salting preserves semantics. */
 class ScaleOpsSpec extends SparkSpec {
 
   private lazy val skewed = {
@@ -63,22 +60,6 @@ class ScaleOpsSpec extends SparkSpec {
     val (approx, exact) = (r.getLong(0).toDouble, r.getLong(1).toDouble)
     assert(math.abs(approx - exact) / exact < 0.1,
       s"approx=$approx exact=$exact (default rsd 0.05)")
-  }
-
-  test("observe metrics report record counts without a second scan") {
-    import spark.implicits._
-    val collector = Metrics.install(spark)
-    val df = Seq(("s", "id1", "CCO"), ("s", "id2", "C"))
-      .toDF("source", "identifier", "smiles")
-    Metrics.observed(df, "ingest_metrics").write.mode("overwrite")
-      .parquet(tmpDir("metrics_out"))
-    // listener fires asynchronously after the action completes
-    val deadline = System.currentTimeMillis() + 10000
-    while (!collector.results.contains("ingest_metrics")
-        && System.currentTimeMillis() < deadline) Thread.sleep(50)
-    val m = collector.results("ingest_metrics")
-    assert(m("n_records") === 2L)
-    assert(m("smiles_chars") === 4L)
   }
 
   test("tfidf df join: no static hint, AQE broadcasts the small vocabulary at runtime") {

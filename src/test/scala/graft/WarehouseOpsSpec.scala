@@ -4,9 +4,9 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Linkage, Profiling, Scd, Search, TextOps}
 
 /** Round-9 batch-two maintenance operators: alignment-free substring
-  * dedup, SCD2 versioning + as-of join (batch and streaming), blocked
-  * fuzzy entity linkage, mergeable quantile sketches (batch and
-  * streaming), the deflate kernel and its gates, inverted-index build/
+  * dedup, SCD2 versioning + as-of join, blocked fuzzy entity linkage,
+  * mergeable quantile sketches, the deflate kernel and its gates,
+  * inverted-index build/
   * probe/upsert, Bloom-pruned joins, PMI collocations, unigram-LM
   * pruning, and the exact-integer KS drift gate.
   */
@@ -685,120 +685,6 @@ class WarehouseOpsSpec extends SparkSpec {
     assert(out == Seq(("view>click>purchase", 2L), ("click>purchase>view", 1L)))
   }
 
-  test("funnelStream advances per-user stage state across batches like the batch funnel") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.EventStreams.FunnelEvent
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val src = MemoryStream[FunnelEvent]
-      val q = graft.streaming.EventStreams
-        .funnelStream(src.toDS(), Seq("view", "click", "purchase"))
-        .writeStream.outputMode("append").format("memory")
-        .queryName("funnel_out").start()
-      try {
-        // user 1 completes across batches; user 2's click precedes its
-        // view (strict order: never advances past view)
-        src.addData(FunnelEvent(1L, "view", ts("2024-01-01 10:00:00")),
-          FunnelEvent(2L, "click", ts("2024-01-01 09:00:00")))
-        q.processAllAvailable()
-        src.addData(FunnelEvent(1L, "click", ts("2024-01-01 11:00:00")),
-          FunnelEvent(2L, "view", ts("2024-01-01 10:00:00")))
-        q.processAllAvailable()
-        src.addData(FunnelEvent(1L, "purchase", ts("2024-01-01 12:00:00")),
-          FunnelEvent(2L, "purchase", ts("2024-01-01 11:00:00")))
-        q.processAllAvailable()
-      } finally q.stop()
-      val depths = spark.table("funnel_out")
-        .groupBy("user_id").agg(max("depth").as("d"))
-        .orderBy("user_id").as[(Long, Long)].collect().toSeq
-      // matches the batch q154 rule on the same events
-      val batch = graft.operators.Funnels.funnel(
-          Seq((1L, "view", ts("2024-01-01 10:00:00")),
-            (1L, "click", ts("2024-01-01 11:00:00")),
-            (1L, "purchase", ts("2024-01-01 12:00:00")),
-            (2L, "click", ts("2024-01-01 09:00:00")),
-            (2L, "view", ts("2024-01-01 10:00:00")),
-            (2L, "purchase", ts("2024-01-01 11:00:00"))).toDF("user_id", "event_type", "ts"),
-          "user_id", "event_type", "ts", Seq("view", "click", "purchase"))
-        .select("user_id", "depth").orderBy("user_id")
-        .as[(Long, Long)].collect().toSeq
-      assert(depths == batch && depths == Seq((1L, 3L), (2L, 1L)))
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
-  test("funnelStreamExpiring emits event-time terminal rows and frees stalled/completed state") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.EventStreams.FunnelEvent
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val src = MemoryStream[FunnelEvent]
-      val cp = tmpDir("funnel_exp_cp")
-      val q = graft.streaming.EventStreams
-        .funnelStreamExpiring(src.toDS(), Seq("view", "click", "purchase"),
-          horizonMs = 3600L * 1000L) // 1h stall horizon
-        .writeStream.outputMode("append").format("memory")
-        .option("checkpointLocation", cp)
-        .queryName("funnel_exp_out").start()
-      try {
-        // user 1 completes inside the horizon; user 2 stalls at view
-        src.addData(FunnelEvent(1L, "view", ts("2024-01-01 10:00:00")),
-          FunnelEvent(2L, "view", ts("2024-01-01 10:00:00")))
-        q.processAllAvailable()
-        src.addData(FunnelEvent(1L, "click", ts("2024-01-01 10:30:00")),
-          FunnelEvent(1L, "purchase", ts("2024-01-01 10:45:00")))
-        q.processAllAvailable()
-        // watermark pusher: 12:30 > user 2's 11:00 expiry → timer fires
-        src.addData(FunnelEvent(9L, "view", ts("2024-01-01 12:30:00")))
-        q.processAllAvailable()
-        src.addData(FunnelEvent(9L, "click", ts("2024-01-01 12:31:00")))
-        q.processAllAvailable()
-        // state-freed proof, behaviorally: user 2's next event is a
-        // CLICK — with stale depth-1 state it would advance to depth 2;
-        // with cleared state it is a non-stage-0 no-op. user 1 already
-        // completed, so a fresh view RESTARTS a new journey at depth 1.
-        src.addData(FunnelEvent(2L, "click", ts("2024-01-01 12:40:00")),
-          FunnelEvent(1L, "view", ts("2024-01-01 12:41:00")))
-        q.processAllAvailable()
-      } finally q.stop()
-      val rows = spark.table("funnel_exp_out")
-        .as[(Long, Long, String, java.sql.Timestamp)].collect().toSeq
-      val u1 = rows.filter(_._1 == 1L).sortBy(_._4.getTime)
-      // non-expired path ≡ funnelStream: the 3 stage rows, then the restart
-      assert(u1.map(r => (r._2, r._3)) ==
-        Seq((1L, "view"), (2L, "click"), (3L, "purchase"), (1L, "view")))
-      val u2 = rows.filter(_._1 == 2L).sortBy(_._4.getTime)
-      assert(u2.map(r => (r._2, r._3)) == Seq((1L, "view"), (1L, "expired")),
-        s"stalled funnel must expire once and never advance after: $u2")
-      // terminal row carries the expiry instant: stage ts (10:00) + 1h
-      assert(u2.last._4 == ts("2024-01-01 11:00:00"))
-      // no expiry for the completed user or the in-horizon user 9
-      assert(!rows.exists(r => r._1 != 2L && r._3 == "expired"))
-      // state size is BOUNDED: read the store itself — only the users
-      // still inside an open funnel hold a row (9 active at depth 2,
-      // and 1's restarted journey at depth 1); completed-then-idle and
-      // expired users were cleared, where the plain funnelStream keeps
-      // one row per user forever
-      val state = spark.read.format("statestore")
-        .option("stateVarName", "funnel_t")
-        .load(cp)
-      val liveKeys = state.select("key.*").collect().map(_.getLong(0)).toSet
-      assert(liveKeys == Set(1L, 9L),
-        s"state must hold only open funnels: $liveKeys")
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   // ---- prefix-filtering similarity join (q157) -----------------------
 
   test("prefixFilterPairs finds every pair at threshold with recall 1, none below") {
@@ -907,44 +793,6 @@ class WarehouseOpsSpec extends SparkSpec {
       (2L, None, None)))
   }
 
-  // ---- streaming SCD2 maintenance ------------------------------------
-
-  test("scd2Stream maintains the versioned dimension across batches, touching only affected buckets") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = tmpDir("scd2-stream")
-    val input = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val q = graft.streaming.EventStreams.scd2Stream(
-        input.toDF().toDF("key", "ts", "attr"),
-        s"$dir/obs", s"$dir/ver", "key", "ts", "attr", buckets = 4)
-      .option("checkpointLocation", s"$dir/ckpt").start()
-    val allObs = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, java.sql.Timestamp, String)]
-    def feed(rows: (Long, java.sql.Timestamp, String)*): Unit = {
-      allObs ++= rows; input.addData(rows: _*); q.processAllAvailable()
-    }
-    try {
-      feed((1L, ts("2020-01-01 00:00:00"), "A"),
-        (2L, ts("2020-01-01 00:00:00"), "X"))
-      feed((1L, ts("2020-02-01 00:00:00"), "A"), // no-op → suppressed
-        (1L, ts("2020-03-01 00:00:00"), "B"))
-      feed((1L, ts("2020-01-15 00:00:00"), "C"), // LATE arrival, mid-chain
-        (3L, ts("2020-04-01 00:00:00"), "Z"))
-    } finally q.stop()
-    val live = graft.streaming.EventStreams.readVersions(spark, s"$dir/ver")
-      .orderBy("key", "valid_from", "attr")
-      .as[(Long, String, java.sql.Timestamp, Option[java.sql.Timestamp], Boolean)]
-      .collect().toSeq
-    val batch = graft.operators.Scd.scd2(
-        allObs.toSeq.toDF("key", "ts", "attr"), Seq("key"), "ts", Seq("attr"))
-      .orderBy("key", "valid_from", "attr")
-      .as[(Long, String, java.sql.Timestamp, Option[java.sql.Timestamp], Boolean)]
-      .collect().toSeq
-    assert(live == batch)
-    // the late arrival rebuilt key 1's chain: C splits the A run
-    assert(live.filter(_._1 == 1L).map(_._2) == Seq("A", "C", "A", "B"))
-  }
-
   // ---- KS drift (q149) -----------------------------------------------
 
   test("ksDrift: identical distributions score zero, disjoint score the maximum") {
@@ -971,77 +819,6 @@ class WarehouseOpsSpec extends SparkSpec {
         driftTenths = 5)
       .as[(String, Long, Long, Long, Boolean)].collect().toSeq
     assert(out == Seq(("g", 3L, 3L, 3L, false))) // D = 1/3 < 0.5
-  }
-
-  // ---- streaming sketch maintenance ----------------------------------
-
-  test("streamed quantile sketch equals the batch sketch of all landed rows") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = tmpDir("sketch-stream")
-    val input = MemoryStream[Long]
-    val q = graft.streaming.EventStreams
-      .quantileSketchStream(input.toDF().withColumnRenamed("value", "v"), "v",
-        s"$dir/store")
-      .option("checkpointLocation", s"$dir/ckpt").start()
-    try {
-      input.addData(1L to 300L: _*); q.processAllAvailable()
-      input.addData(301L to 700L: _*); q.processAllAvailable()
-      input.addData(701L to 1000L: _*); q.processAllAvailable()
-    } finally q.stop()
-    val live = graft.streaming.EventStreams.readSketchStore(spark, s"$dir/store")
-      .as[(Long, Long)].collect().toMap
-    val batch = Profiling.histSketch((1L to 1000L).toDF("v"), col("v"))
-      .as[(Long, Long)].collect().toMap
-    assert(live == batch)
-    // a replayed batch overwrites its own partition: land batch 1's
-    // rows again under the same id and re-check nothing changed
-    Profiling.histSketch((301L to 700L).toDF("v"), col("v"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/store/batch_id=1")
-    val replayed = graft.streaming.EventStreams.readSketchStore(spark, s"$dir/store")
-      .as[(Long, Long)].collect().toMap
-    assert(replayed == batch)
-  }
-
-  test("streamed KMV sketch store is BIT-IDENTICAL to the batch sketch (split invariance)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = tmpDir("kmv-stream")
-    val k = 16
-    // (corpus, key) arrivals with CROSS-BATCH duplicates planted:
-    // wave 1 re-delivers some of wave 0's keys
-    def rows(r: Range) = r.map(i => (if (i % 2 == 0) "A" else "B", s"key-${i % 130}"))
-    val input = MemoryStream[(String, String)]
-    val q = graft.streaming.EventStreams
-      .kmvSketchStream(input.toDF().toDF("corpus", "key"), "corpus", "key",
-        k, s"$dir/store")
-      .option("checkpointLocation", s"$dir/ckpt").start()
-    try {
-      input.addData(rows(0 until 60): _*); q.processAllAvailable()
-      input.addData(rows(40 until 120): _*); q.processAllAvailable()
-      input.addData(rows(120 until 180): _*); q.processAllAvailable()
-    } finally q.stop()
-    val live = graft.streaming.EventStreams
-      .readKmvStore(spark, s"$dir/store", "corpus", k)
-      .as[(String, Long, Seq[Long])].collect().sortBy(_._1).toSeq
-    // batch side = everything that ARRIVED (the 40–60 keys arrive in
-    // two waves: n_rows counts arrivals, the kmv dedups the keys)
-    val arrived = rows(0 until 60) ++ rows(40 until 120) ++ rows(120 until 180)
-    val batch = graft.operators.CorpusOverlap
-      .kmvSketches(arrived.toDF("corpus", "key"), "corpus", col("key"), k)
-      .as[(String, Long, Seq[Long])].collect().sortBy(_._1).toSeq
-    // counts add AND the hash arrays match bit-for-bit: the streaming
-    // estimate carries zero stream-induced error (contrast q133's HLL
-    // promotion-boundary non-identity)
-    assert(live == batch, s"stream fold must equal batch sketch: $live vs $batch")
-    // idempotent replay: land batch 1's sketch again under its own id
-    graft.operators.CorpusOverlap
-      .kmvSketches(rows(40 until 120).toDF("corpus", "key"), "corpus", col("key"), k)
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/store/batch_id=1")
-    val replayed = graft.streaming.EventStreams
-      .readKmvStore(spark, s"$dir/store", "corpus", k)
-      .as[(String, Long, Seq[Long])].collect().sortBy(_._1).toSeq
-    assert(replayed == batch)
   }
 
   // ---- textRank cache hygiene (q131) -----------------------------------
